@@ -6,11 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.chunk.{GorillaDecodeGen, GorillaEncodeAgg}
 
-/** Session extension registering graft's native Catalyst functions.
-  * Activate with `.config("spark.sql.extensions", "graft.GraftExtensions")`
-  * on the session builder; callers that cannot control the builder keep
-  * working — [[graft.chunk.ChunkOps.writeChunks]] probes the registry and
-  * falls back to the equivalent UDF plan when the function is absent.
+/** Session extension registering graft's native Catalyst functions, the
+  * only plan of the chunk codec. Activate with
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")` on the
+  * session builder; in a session without it [[graft.chunk.ChunkOps]]
+  * fails at analysis with Spark's unresolved-function error.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = GraftExtensions.inject(ext)
@@ -25,7 +25,7 @@ object GraftExtensions {
 
   /** The function descriptions, shared by [[inject]] (session-build path)
     * and [[registerInto]] (direct registry path, e.g. restoring after a
-    * test deregisters to exercise the UDF fallback). */
+    * test deregisters them). */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (
       FunctionIdentifier(EncodeName),

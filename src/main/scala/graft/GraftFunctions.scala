@@ -1,37 +1,21 @@
 package graft
 
-import graft.chunk.Gorilla
 import graft.hist.WeightedQuantile
 import org.apache.spark.sql.SparkSession
 
-/** SQL-surface registration: the two pieces of the engine that are not
-  * plain Catalyst expressions (the chunk codec and the exact weighted
-  * quantile) exposed as functions so `spark.sql` users get the full
-  * operator set (SURVEY.md §4 item 3).
+/** SQL-surface registration of the exact weighted quantile, which is not a
+  * plain Catalyst expression, so `spark.sql` users get the full operator
+  * set (SURVEY.md §4 item 3). The chunk codec's SQL surface is the native
+  * `ts_chunk_encode` / `ts_chunk_explode` pair of [[GraftExtensions]].
   *
   * {{{
   * GraftFunctions.register(spark)
-  * spark.sql("SELECT key, ts_decompress(blob) FROM chunks")
   * spark.sql("SELECT key, ts_quantile(hist, 0.5) FROM dists")
   * }}}
   */
 object GraftFunctions {
 
-  case class Point(t: Long, v: Option[Double])
-
   def register(spark: SparkSession): Unit = {
-    spark.udf.register("ts_compress", (ts: Seq[Long], vs: Seq[java.lang.Double]) => {
-      // fail loudly on ragged input — Seq.zip would silently truncate to the
-      // shorter side and the blob would drop trailing points
-      require(ts.length == vs.length,
-        s"ts_compress: ${ts.length} times vs ${vs.length} values")
-      val sorted = ts.zip(vs).sortBy(_._1)
-      Gorilla.encode(sorted.map(_._1).toArray, sorted.map(_._2).toArray)
-    })
-    spark.udf.register("ts_decompress", (blob: Array[Byte]) => {
-      val (ts, vs) = Gorilla.decode(blob)
-      ts.indices.map(i => Point(ts(i), Option(vs(i)).map(_.doubleValue)))
-    })
     spark.udf.register("ts_quantile", (hist: Map[Double, Double], q: Double) =>
       if (hist == null || hist.isEmpty) null
       else WeightedQuantile.quantile(hist, q).map(java.lang.Double.valueOf).orNull)

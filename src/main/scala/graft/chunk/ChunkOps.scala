@@ -12,52 +12,28 @@ import org.apache.spark.sql.functions._
   */
 object ChunkOps {
 
-  /** The fallback encode plan's lambda — package-visible so the A/B bench
-    * probe measures THIS definition, not a hand-copied one that could
-    * drift from the real fallback. */
-  private[graft] val encodeUdf = udf { (rows: Seq[Row]) =>
-    val sorted = rows.sortBy(_.getLong(0))
-    val ts = sorted.map(_.getLong(0)).toArray
-    val vs = sorted
-      .map(r => if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1)))
-      .toArray
-    Gorilla.encode(ts, vs)
-  }
-
-  private[graft] val decodeUdf = udf { (blob: Array[Byte]) =>
-    val (ts, vs) = Gorilla.decode(blob)
-    ts.indices.map(i => (ts(i), Option(vs(i)).map(_.doubleValue())))
-  }
-
   /** points (key, t: long µs, v) -> chunks (key, bucket, n_points, blob).
     * One shuffle (groupBy); accumulation is bounded by chunkSpan, which the
     * caller sizes so a chunk fits executor memory (e.g. 1 day of points per
     * url).
     *
-    * When the session was built with `spark.sql.extensions=graft.GraftExtensions`
-    * the encode runs as the native `ts_chunk_encode` Catalyst aggregate
+    * The encode is the native `ts_chunk_encode` Catalyst aggregate
     * ([[GorillaEncodeAgg]]): primitive-array accumulation, 17-byte/point
-    * partial-aggregate shuffle, no boxed Row list. Otherwise it falls back
-    * to the equivalent `collect_list` + UDF plan; both emit byte-identical
-    * blobs for unique-per-t points (asserted in GorillaSpec).
+    * partial-aggregate shuffle, no boxed Row list. The session must be
+    * built with `spark.sql.extensions=graft.GraftExtensions`; without it
+    * the plan fails at analysis on the unresolved function.
     *
     * Rows with a null time carry no measurement and are dropped up front,
     * so `n_points` counts exactly the encoded points and readChunks stays
-    * the inverse on any input (without the filter the native aggregate
-    * would skip them while the UDF's getLong(0) would throw).
+    * the inverse on any input.
     */
-  def writeChunks(points: DataFrame, chunkSpanMicros: Long): DataFrame = {
-    val native = points.sparkSession.catalog.functionExists(graft.GraftExtensions.EncodeName)
-    val enc =
-      if (native) call_function(graft.GraftExtensions.EncodeName, col(T), col(V))
-      else encodeUdf(collect_list(struct(col(T), col(V))))
+  def writeChunks(points: DataFrame, chunkSpanMicros: Long): DataFrame =
     points
       .where(col(T).isNotNull)
       .groupBy(col(K), floor(col(T) / chunkSpanMicros).as("bucket"))
       .agg(
         count(lit(1)).as("n_points"),
-        enc.as("blob"))
-  }
+        call_function(graft.GraftExtensions.EncodeName, col(T), col(V)).as("blob"))
 
   private[graft] val encodeStateUdf = udf { (rows: Seq[Row]) =>
     val sorted = rows.sortBy(_.getLong(0))
@@ -105,16 +81,9 @@ object ChunkOps {
       .select(col(K), col("p._1").as(T), col("p._2").as(V))
 
   /** chunks -> points; exact inverse of [[writeChunks]] (round-trip
-    * property-tested). Native generator when the extension is registered
-    * (rows straight off the codec's primitive arrays), UDF+explode
-    * otherwise. */
-  def readChunks(chunks: DataFrame): DataFrame = {
-    if (chunks.sparkSession.catalog.functionExists(graft.GraftExtensions.DecodeName))
-      chunks
-        .select(col(K), call_function(graft.GraftExtensions.DecodeName, col("blob")).as(Seq(T, V)))
-    else
-      chunks
-        .select(col(K), explode(decodeUdf(col("blob"))).as("p"))
-        .select(col(K), col("p._1").as(T), col("p._2").as(V))
-  }
+    * property-tested), through the native `ts_chunk_explode` generator
+    * ([[GorillaDecodeGen]]: rows straight off the codec's primitive
+    * arrays). Needs the same session extension as [[writeChunks]]. */
+  def readChunks(chunks: DataFrame): DataFrame =
+    chunks.select(col(K), call_function(graft.GraftExtensions.DecodeName, col("blob")).as(Seq(T, V)))
 }

@@ -43,7 +43,6 @@ object Gorilla {
       while (i >= 0) { writeBit(((value >>> i) & 1L).toInt); i -= 1 }
     }
     def toBytes: Array[Byte] = java.util.Arrays.copyOf(buf, (bitPos + 7) / 8)
-    def lengthBits: Int = bitPos
   }
 
   private final class BitReader(bytes: Array[Byte], startBit: Int) {

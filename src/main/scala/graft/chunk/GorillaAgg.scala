@@ -84,10 +84,10 @@ object ChunkBuffer {
   * straight into primitive arrays (update and merge are O(1)/O(n)
   * arraycopies, serialize is one ByteBuffer), so the per-point cost is
   * the codec itself. Registered via SparkSessionExtensions
-  * ([[graft.GraftExtensions]], spark.sql.extensions=graft.GraftExtensions);
-  * [[ChunkOps.writeChunks]] falls back to the UDF form when the function
-  * is not registered, and both paths emit byte-identical blobs (same
-  * time sort, same codec stream — asserted in GorillaSpec).
+  * ([[graft.GraftExtensions]], spark.sql.extensions=graft.GraftExtensions)
+  * and the only encode plan of [[ChunkOps.writeChunks]]. Its blobs are
+  * byte-identical to the `collect_list` + UDF form (same time sort, same
+  * codec stream — asserted in GorillaAggSpec).
   */
 case class GorillaEncodeAgg(
     t: Expression,

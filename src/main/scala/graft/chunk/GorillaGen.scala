@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StructType}
   * yields InternalRows straight off the codec's primitive arrays — one
   * small row allocation per point, no Option/tuple boxing, no
   * encoder pass. Registered alongside the encode aggregate in
-  * [[graft.GraftExtensions]]; [[ChunkOps.readChunks]] falls back to the
-  * UDF plan when the function is absent and both paths decode to
-  * identical rows (GorillaAggSpec).
+  * [[graft.GraftExtensions]] and the only decode plan of
+  * [[ChunkOps.readChunks]]; it decodes to the rows of a driver-side
+  * `Gorilla.decode` replay (GorillaAggSpec).
   */
 case class GorillaDecodeGen(child: Expression)
   extends Generator with CodegenFallback with UnaryLike[Expression] {

@@ -721,12 +721,11 @@ object Correlation {
       maxBins: Int = 65536): DataFrame = {
     require(binUs > 0, s"bin width $binUs must be positive")
     require(maxBins >= 1, s"maxBins $maxBins must be >= 1")
-    val g0 = df.filter(col(V).isNotNull)
+    val g = df.filter(col(V).isNotNull)
       .groupBy(col(K), floor(col(T) / binUs).cast("long").as("_b"))
       .agg(sum(floor(col(V) * 1000 + 0.5).cast("long")).as("_q"),
         count(lit(1)).as("_c"))
       .select(col(K), col("_b"), expr("_q div _c").as("_x"))
-    val g = g0
     val pairs = g.join(
       g.select(col(K).as("_rk"), col("_b").as("_rb"), col("_x").as("_y")),
       g(K) <=> col("_rk") && g("_b") < col("_rb"))
@@ -793,13 +792,12 @@ object Correlation {
     require(seasons >= 1, s"seasons $seasons must be >= 1")
     require(maxBinsPerSeason >= 1,
       s"maxBinsPerSeason $maxBinsPerSeason must be >= 1")
-    val g0 = df.filter(col(V).isNotNull)
+    val g = df.filter(col(V).isNotNull)
       .groupBy(col(K), floor(col(T) / binUs).cast("long").as("_b"))
       .agg(sum(floor(col(V) * 1000 + 0.5).cast("long")).as("_q"),
         count(lit(1)).as("_c"))
       .select(col(K), col("_b"), pmod(col("_b"), lit(seasons.toLong)).as("_h"),
         expr("_q div _c").as("_x"))
-    val g = g0
     val pairs = g.join(
       g.select(col(K).as("_rk"), col("_h").as("_rh"), col("_b").as("_rb"),
         col("_x").as("_y")),

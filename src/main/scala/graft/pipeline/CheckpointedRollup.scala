@@ -5,13 +5,25 @@ import graft.regularize.CalendarFloor
 import graft.rollup.Rollup
 import graft.chunk.ChunkOps
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The north-rule end-to-end pipeline: pages → per-url series → compact →
   * chunk blobs + hourly → daily → weekly continuous-aggregate tiers, with a
   * per-(tier, partition) checkpoint table carrying lineage + row counts so
   * a rerun resumes idempotently mid-tier (BASELINE.json north_rule).
+  *
+  * Daily and weekly rows are [[Rollup.rebinStats]] of the tier below (the
+  * lossless cascade). A tick's counts are read back from the partitions the
+  * tier just wrote — `rowCount` rows, `inputRows` = sum of their `n_points`
+  * (the distinct tier, whose registers carry no point count, counts its
+  * input points instead) — so nothing is computed twice to count it.
+  *
+  * Open week: a week partition is committed only once the series' last
+  * day bucket reaches the week's last day. Until then the week is written
+  * on every run but left pending, so a later run — or a rerun after a crash
+  * between the daily and weekly commits — rebuilds it from `daily` with all
+  * of its days. [[retain]] therefore keeps at least a week of daily rows.
   *
   * Partitioning: work is split by day-bucket (time-range partitions); each
   * bucket is processed and committed independently. At cluster scale the
@@ -178,7 +190,7 @@ object CheckpointedRollup {
       case (acc, b)                              => acc :+ (b, b)
     }
 
-  private def inRuns(c: org.apache.spark.sql.Column, rs: Seq[(Long, Long)]): org.apache.spark.sql.Column =
+  private def inRuns(c: Column, rs: Seq[(Long, Long)]): Column =
     rs.map { case (lo, hi) => c >= lo && c <= hi }.reduce(_ || _)
 
   /** The resume-efficient input for one pending run of day-buckets
@@ -230,29 +242,24 @@ object CheckpointedRollup {
       // filter(compact(full)) because a row's keep/drop decision depends
       // only on its predecessor row, which the carry-in supplies — so chunk
       // contents are independent of which buckets run together.
-      runTier(spark, dir, "chunks", allBuckets) { buckets =>
+      runTier(spark, dir, "chunks", "raw", allBuckets) { buckets =>
         val rs = contiguousRuns(buckets)
         val in = rs.map { case (lo, hi) => runInput(pts, lo, hi, withSuccessors = false) }
           .reduce(_ unionByName _)
-        val out = ChunkOps
+        ChunkOps
           .writeChunks(graft.core.SeriesOps.compact(in), DAY)
           .withColumn("partition", col("bucket"))
           .filter(inRuns(col("partition"), rs)) // carry-in rows chunk outside the runs
-        (out, out.groupBy(col("partition"))
-          .agg(sum("n_points").as("input_rows"), count(lit(1)).as("row_count")))
       }
 
       // ---- tier: hourly stats from pending-day points only (+ carry-in /
       // successor rows for exact gap-fill at the run edges)
-      runTier(spark, dir, "hourly", allBuckets) { buckets =>
-        val rs = contiguousRuns(buckets)
-        val out = rs.map { case (lo, hi) =>
+      runTier(spark, dir, "hourly", "raw", allBuckets) { buckets =>
+        contiguousRuns(buckets).map { case (lo, hi) =>
           Rollup.tierStats(runInput(pts, lo, hi, withSuccessors = true),
             lo * DAY, (hi + 1) * DAY, HOUR)
         }.reduce(_ unionByName _)
           .withColumn("partition", floor(col("bin_start") / DAY).cast("long"))
-        (out, out.groupBy("partition")
-          .agg(sum("n_points").as("input_rows"), count(lit(1)).as("row_count")))
       }
 
       // ---- tier: per-hour ACTIVE-SERIES cardinality registers — HLL
@@ -262,60 +269,42 @@ object CheckpointedRollup {
       // idempotent by construction; coarser reads (daily/weekly distinct
       // series) are LOSSLESS max-merges of these rows via Hll.merge +
       // Hll.estimate — verified in PipelineSpec.
-      runTier(spark, dir, "distinct", allBuckets) { buckets =>
-        val rs = contiguousRuns(buckets)
-        val in = pts.filter(inRuns(floor(col(T) / DAY).cast("long"), rs))
-        val out = graft.sketch.Hll.registers(
-          in.withColumn("hour", floor(col(T) / HOUR).cast("long")),
+      val day = floor(col(T) / DAY).cast("long")
+      def daysOf(buckets: Seq[Long]) = pts.filter(inRuns(day, contiguousRuns(buckets)))
+      // registers carry no point count, so input_rows is counted on the
+      // INPUT side: a day whose rows all carry null keys yields zero
+      // registers but its lineage must still record what was read
+      val inputDays = (buckets: Seq[Long]) =>
+        daysOf(buckets).groupBy(day.as("partition")).agg(count(lit(1)).as("input_rows"))
+      runTier(spark, dir, "distinct", "raw", allBuckets, inputRows = Some(inputDays)) { buckets =>
+        graft.sketch.Hll.registers(
+          daysOf(buckets).withColumn("hour", floor(col(T) / HOUR).cast("long")),
           Seq("hour"), K)
           .withColumn("partition", floor(col("hour") / lit(24L)).cast("long"))
-        // left join from the INPUT side: a day whose rows all carry null
-        // keys yields zero registers but its input_rows lineage must
-        // still record what was read
-        val ticks = in
-          .groupBy(floor(col(T) / DAY).cast("long").as("partition"))
-          .agg(count(lit(1)).as("input_rows"))
-          .join(out.groupBy("partition").agg(count(lit(1)).as("row_count")),
-            Seq("partition"), "left")
-          .select(col("partition"), col("input_rows"),
-            coalesce(col("row_count"), lit(0L)).as("row_count"))
-        (out, ticks)
       }
 
       // ---- tier: daily rebinned FROM hourly (the exact cascade)
       val hourly = spark.read.parquet(s"$dir/hourly")
-      runTier(spark, dir, "daily", allBuckets) { buckets =>
-        val out = hourly
-          .filter(inRuns(col("partition"), contiguousRuns(buckets)))
-          .groupBy(col(K), (floor(col("bin_start") / DAY) * DAY).cast("long").as("bin_start"))
-          .agg(
-            sum(col("covered_us")).as("covered_us"),
-            (sum(col("twa_mean") * col("covered_us")) / sum(when(col("twa_mean").isNotNull, col("covered_us")))).as("twa_mean"),
-            min("min").as("min"), max("max").as("max"),
-            sum("n_points").as("n_points"))
+      runTier(spark, dir, "daily", "hourly", allBuckets) { buckets =>
+        Rollup.rebinStats(hourly.filter(inRuns(col("partition"), contiguousRuns(buckets))),
+          Rollup.floorTo(DAY))
           .withColumn("partition", floor(col("bin_start") / DAY).cast("long"))
-        (out, out.groupBy("partition")
-          .agg(sum("n_points").as("input_rows"), count(lit(1)).as("row_count")))
       }
 
       // ---- tier: weekly rebinned FROM daily (partition = week bucket);
-      // input pruned to the daily rows whose week is pending
+      // input pruned to the daily rows whose week is pending. A week is
+      // committed only once the series reaches its last day: the open week
+      // is written on every run but stays pending, so a later run that
+      // brings the rest of its days rebuilds it from daily.
       val daily = spark.read.parquet(s"$dir/daily")
+      def weekOf(c: Column) = floor((c - 4 * DAY) / WEEK).cast("long")
       val weekBuckets = allBuckets.map(b => Math.floorDiv(b * DAY - 4 * DAY, WEEK)).distinct
-      runTier(spark, dir, "weekly", weekBuckets) { buckets =>
-        val rs = contiguousRuns(buckets)
-        val wkStart = Rollup.floorWeek(col("bin_start"))
-        val out = daily
-          .filter(inRuns(floor((col("bin_start") - 4 * DAY) / WEEK).cast("long"), rs))
-          .groupBy(col(K), wkStart.as("bin_start"))
-          .agg(
-            sum(col("covered_us")).as("covered_us"),
-            (sum(col("twa_mean") * col("covered_us")) / sum(when(col("twa_mean").isNotNull, col("covered_us")))).as("twa_mean"),
-            min("min").as("min"), max("max").as("max"),
-            sum("n_points").as("n_points"))
-          .withColumn("partition", floor((col("bin_start") - 4 * DAY) / WEEK).cast("long"))
-        (out, out.groupBy("partition")
-          .agg(sum("n_points").as("input_rows"), count(lit(1)).as("row_count")))
+      val seriesEnd = (Math.floorDiv(maxT, DAY) + 1) * DAY
+      runTier(spark, dir, "weekly", "daily", weekBuckets,
+          closed = w => (w + 1) * WEEK + 4 * DAY <= seriesEnd) { buckets =>
+        Rollup.rebinStats(daily.filter(inRuns(weekOf(col("bin_start")), contiguousRuns(buckets))),
+          Rollup.floorWeek)
+          .withColumn("partition", weekOf(col("bin_start")))
       }
     } finally pts.unpersist()
   }
@@ -327,7 +316,8 @@ object CheckpointedRollup {
     * behind `nowUs` (distinct defaults to keep-forever: registers are
     * hundreds of bytes per partition, but the policy hook exists so a
     * deployment can prune them like any tier); weekly is kept forever.
-    * Each drop runs under the tier lock and is recorded as a
+    * `dailyKeepUs` must cover a week, since the open week is rebuilt from
+    * daily rows. Each drop runs under the tier lock and is recorded as a
     * checkpoint tick (status="retained"), so
     *  - a second `retain` is a no-op (already-retained partitions are
     *    skipped),
@@ -339,6 +329,8 @@ object CheckpointedRollup {
   def retain(spark: SparkSession, dir: String, nowUs: Long,
       chunksKeepUs: Long, hourlyKeepUs: Long, dailyKeepUs: Long,
       distinctKeepUs: Long = Long.MaxValue): Unit = {
+    require(dailyKeepUs >= WEEK,
+      s"dailyKeepUs $dailyKeepUs < one week: the open week is rebuilt from daily rows")
     Seq(("chunks", chunksKeepUs), ("hourly", hourlyKeepUs),
         ("daily", dailyKeepUs), ("distinct", distinctKeepUs))
       // keep-forever horizons are skipped outright — nowUs - MaxValue
@@ -366,29 +358,48 @@ object CheckpointedRollup {
 
   /** Process only pending partitions of a tier, write them with DYNAMIC
     * partition overwrite (only the partitions present in this batch are
-    * replaced), then commit checkpoint rows with counts. Idempotent even
-    * across a crash BETWEEN the data write and the checkpoint append: the
-    * rerun re-processes the uncommitted partitions and overwrites — never
-    * appends a second copy into — their directories.
+    * replaced), then commit one checkpoint tick per pending partition that
+    * is `closed`. Idempotent even across a crash BETWEEN the data write and
+    * the checkpoint append: the rerun re-processes the uncommitted
+    * partitions and overwrites — never appends a second copy into — their
+    * directories.
+    *
+    * A tick's counts are read back from the partitions just written, in one
+    * aggregate: `rowCount` is the stored row count and `inputRows` the sum
+    * of the rows' `n_points`, unless `inputRows` gives per-partition
+    * (partition, count) rows for a tier whose rows carry no point count.
+    * Lineage names `parent`, the tier the rows were computed from.
     */
-  private def runTier(spark: SparkSession, dir: String, tier: String, allBuckets: Seq[Long])(
-      f: Seq[Long] => (DataFrame, DataFrame)): Unit = withTierLock(spark, dir, tier) {
+  private def runTier(spark: SparkSession, dir: String, tier: String, parent: String,
+      allBuckets: Seq[Long], closed: Long => Boolean = _ => true,
+      inputRows: Option[Seq[Long] => DataFrame] = None)(
+      rows: Seq[Long] => DataFrame): Unit = withTierLock(spark, dir, tier) {
     // pending re-read INSIDE the lock: a concurrent driver that just
     // finished this tier has already committed its ticks
     val pending = pendingBuckets(spark, dir, tier, allBuckets)
     if (pending.isEmpty) return
-    val (out, counts) = f(pending)
+    val out = rows(pending)
     out.write
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
       .partitionBy("partition")
       .parquet(s"$dir/$tier")
-    val countRows = counts.collect()
-    val got = countRows.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val ticks = pending.map { b =>
-      val (in, n) = got.getOrElse(b, (0L, 0L))
-      Tick(tier, b, n, in, lineage = s"$tier<-${if (tier == "daily") "hourly" else if (tier == "weekly") "daily" else "raw"}@$b", status = "done")
+    val commit = pending.filter(closed)
+    if (commit.isEmpty) return
+    // the written schema, so the partition column reads back as long and an
+    // empty tier directory reads as no rows
+    val written = spark.read.schema(out.schema).parquet(s"$dir/$tier")
+      .filter(inRuns(col("partition"), contiguousRuns(commit)))
+      .groupBy(col("partition"))
+    val counts = inputRows match {
+      case None    => written.agg(count(lit(1)).as("row_count"), sum("n_points").as("input_rows"))
+      case Some(f) => written.agg(count(lit(1)).as("row_count")).join(f(commit), Seq("partition"), "right")
     }
-    appendCheckpoint(spark, dir, ticks)
+    val got = counts.collect().map(r =>
+      r.getLong(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2))).toMap
+    appendCheckpoint(spark, dir, commit.map { b =>
+      val (n, in) = got.getOrElse(b, (0L, 0L))
+      Tick(tier, b, n, in, lineage = s"$tier<-$parent@$b", status = "done")
+    })
   }
 }

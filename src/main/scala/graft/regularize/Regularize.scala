@@ -32,15 +32,6 @@ object Regularize {
     b.result()
   }
 
-  def gridDoubles(start: Double, end: Double, period: Double): Seq[Double] = {
-    require(period > 0 && period <= end - start,
-      s"sampling period $period not in (0, ${end - start}]")
-    val b = Seq.newBuilder[Double]
-    var cur = start
-    while (cur <= end) { b += cur; cur += period }
-    b.result()
-  }
-
   /** keys × broadcast time axis -> probe rows (key, t). */
   def gridDf(keys: DataFrame, times: DataFrame): DataFrame =
     keys.select(col(K)).distinct().crossJoin(broadcast(times.select(col(T))))

@@ -81,9 +81,6 @@ object TextOps {
     "it" -> Seq("il", "la", "che", "di", "è", "per", "con", "non", "una", "sono"),
     "pt" -> Seq("o", "a", "os", "as", "é", "de", "que", "em", "para", "não"))
 
-  def langScore(text: Column, markers: Seq[String]): Column =
-    langScoreOf(transform(wsTokens(text), t => lower(t)), markers)
-
   private def langScoreOf(lowToks: Column, markers: Seq[String]): Column = {
     val arr = array(markers.map(lit): _*)
     size(filter(lowToks, t => array_contains(arr, t)))

@@ -47,50 +47,6 @@ object Probe {
         require(distinct == (n + 7) / 8, s"$distinct components")
         distinct
       }
-      // chunk-encode A/B: native ts_chunk_encode aggregate vs the legacy
-      // collect_list+UDF plan, isolated from the rest of the rollup job
-      case "chunkNative" | "chunkUdf" => () => {
-        import org.apache.spark.sql.functions._
-        val dir = graft.Bench.pagesTable(spark, 8000000L)
-        val series = graft.core.SeriesOps.compact(
-          graft.pipeline.Pages.toSeries(spark.read.parquet(dir)))
-        val day = graft.regularize.CalendarFloor.DAY
-        val enc =
-          if (name == "chunkNative")
-            call_function(graft.GraftExtensions.EncodeName, col("t"), col("v"))
-          else
-            // the REAL fallback lambda, not a copy that could drift
-            graft.chunk.ChunkOps.encodeUdf(collect_list(struct(col("t"), col("v"))))
-        series.groupBy(col("key"), floor(col("t") / day).as("bucket"))
-          .agg(enc.as("blob"))
-          .select(sum(length(col("blob")))).head().getLong(0)
-      }
-      // chunk-decode A/B: native ts_chunk_explode generator vs UDF+explode.
-      // The chunk table is staged to parquet HERE — outside the timed
-      // thunk, overwriting any leftover from an older codec build so the
-      // A/B never measures stale blobs — and only the scan+decode is timed.
-      case "chunkDecNative" | "chunkDecUdf" => {
-        import org.apache.spark.sql.functions._
-        val day = graft.regularize.CalendarFloor.DAY
-        val chunkDir = "/tmp/graft_probe_chunks8m"
-        val dir = graft.Bench.pagesTable(spark, 8000000L)
-        graft.chunk.ChunkOps.writeChunks(
-          graft.core.SeriesOps.compact(
-            graft.pipeline.Pages.toSeries(spark.read.parquet(dir))), day)
-          .write.mode("overwrite").parquet(chunkDir)
-        () => {
-          val chunks = spark.read.parquet(chunkDir)
-          val decoded =
-            if (name == "chunkDecNative")
-              chunks.select(col("key"),
-                call_function(graft.GraftExtensions.DecodeName, col("blob")).as(Seq("t", "v")))
-            else
-              // the REAL fallback lambda, not a copy that could drift
-              chunks.select(col("key"), explode(graft.chunk.ChunkOps.decodeUdf(col("blob"))).as("p"))
-                .select(col("key"), col("p._1").as("t"), col("p._2").as("v"))
-          decoded.select(sum(col("t") % 7 + coalesce(col("v"), lit(0.0)))).head().getDouble(0).toLong
-        }
-      }
       // component probes for the minhash pipeline (dev-only)
       case "mh_shingles" => () =>
         graft.GraftQueries.docs(spark, sfDir)

@@ -2,12 +2,15 @@ package graft
 
 import graft.chunk.{ChunkOps, Gorilla}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.functions._
 
 /** The native `ts_chunk_encode` Catalyst aggregate (GorillaEncodeAgg):
-  * registration, byte-identity with the legacy collect_list+UDF plan,
-  * round-trip, and the plan-shape guarantee that the native path carries
-  * no boxed row list.
+  * registration, byte-identity with a reference collect_list+UDF plan,
+  * round-trip, the plan-shape guarantee that the native path carries no
+  * boxed row list, and the loud failure of a session without the
+  * extension.
   */
 class GorillaAggSpec extends SparkSpec {
 
@@ -24,8 +27,13 @@ class GorillaAggSpec extends SparkSpec {
     }.toDF("key", "t", "v").withColumn("v", col("v").cast("double"))
   }
 
+  private def registry: FunctionRegistry = spark.sessionState.functionRegistry
+
+  private def registered(name: String): Boolean =
+    registry.lookupFunction(FunctionIdentifier(name)).isDefined
+
   test("GraftExtensions registers ts_chunk_encode in the session") {
-    assert(spark.catalog.functionExists(GraftExtensions.EncodeName))
+    assert(registered(GraftExtensions.EncodeName))
   }
 
   test("native aggregate emits byte-identical blobs to the collect_list+UDF form") {
@@ -98,40 +106,23 @@ class GorillaAggSpec extends SparkSpec {
     assert(ts.toSeq == Seq(1700000000000000L, 1700000000060000L))
   }
 
-  test("UDF fallback (functions deregistered) emits byte-identical chunks and round-trips") {
+  test("writeChunks fails at analysis without the extension functions") {
     // spark.sql.extensions is a static conf on the shared SparkContext, so
     // an extension-free session can't be built in this JVM; drop the
     // functions from the live registry instead and restore after.
-    val ss = spark.getClass.getMethod("sessionState").invoke(spark)
-    val reg = ss.getClass.getMethod("functionRegistry").invoke(ss)
-      .asInstanceOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry]
-    val df = pts(1200, "f", keyCount = 3)
-    val day = 86400000000L
-    val native = ChunkOps.writeChunks(df, day).collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getAs[Array[Byte]](3).toSeq)).toMap
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val reg = registry
     assert(reg.dropFunction(FunctionIdentifier(GraftExtensions.EncodeName)))
     assert(reg.dropFunction(FunctionIdentifier(GraftExtensions.DecodeName)))
     try {
-      assert(!spark.catalog.functionExists(GraftExtensions.EncodeName))
-      val fb = ChunkOps.writeChunks(df, day)
-      val fbPlan = fb.queryExecution.executedPlan.toString
-      assert(!fbPlan.contains("ts_chunk_encode") && fbPlan.contains("collect_list"), fbPlan)
-      val got = fb.collect()
-        .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getAs[Array[Byte]](3).toSeq)).toMap
-      assert(got == native)
-      val back = ChunkOps.readChunks(fb)
-      assert(!back.queryExecution.executedPlan.toString.contains("ts_chunk_explode"))
-      val rows = back.collect().map(r => (r.getString(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(2))))).toSet
-      val orig = df.collect().map(r => (r.getString(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(2))))).toSet
-      assert(rows == orig)
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        ChunkOps.writeChunks(pts(100, "f"), 86400000000L)
+      }
+      assert(e.getMessage.contains(GraftExtensions.EncodeName), e.getMessage)
     } finally {
       GraftExtensions.registerInto(reg)
     }
-    assert(spark.catalog.functionExists(GraftExtensions.EncodeName))
-    assert(spark.catalog.functionExists(GraftExtensions.DecodeName))
+    assert(registered(GraftExtensions.EncodeName))
+    assert(registered(GraftExtensions.DecodeName))
   }
 
   test("native plan carries ts_chunk_encode and no collect_list") {

@@ -61,6 +61,26 @@ class PipelineSpec extends SparkSpec {
       directDaily.exceptAll(mergedDaily).isEmpty,
       "distinct tier merge diverged from raw-built registers")
 
+    // lineage counts: every done tick's rowCount is its stored partition's
+    // row count, and inputRows the partition's sum(n_points) wherever the
+    // rows carry one (distinct counts raw input points instead)
+    val ticks = cp.filter(col("status") === "done").collect()
+    Seq("chunks", "hourly", "distinct", "daily", "weekly").foreach { tier =>
+      val rows = spark.read.parquet(s"$dir/$tier")
+      val pointSum = if (tier == "distinct") lit(0L) else sum("n_points")
+      val stored = rows.groupBy(col("partition").cast("long"))
+        .agg(count(lit(1)), pointSum).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val tierTicks = ticks.filter(_.getString(0) == tier)
+      assert(tierTicks.nonEmpty, s"no $tier ticks")
+      tierTicks.foreach { t =>
+        val (n, in) = stored.getOrElse(t.getLong(1), (0L, 0L))
+        assert(t.getLong(2) == n, s"$tier@${t.getLong(1)}: rowCount ${t.getLong(2)} vs $n stored")
+        if (tier != "distinct")
+          assert(t.getLong(3) == in, s"$tier@${t.getLong(1)}: inputRows ${t.getLong(3)} vs $in")
+      }
+    }
+
     // resume: drop the checkpoint rows + outputs of one daily partition and rerun
     val victim = cp.filter(col("tier") === "daily").select("partition").head().getLong(0)
     val cpAll = cp.collect()
@@ -293,6 +313,80 @@ class PipelineSpec extends SparkSpec {
     val cp2 = CheckpointedRollup.readCheckpoint(spark, dir)
     assert(cp2.filter(col("tier") === "distinct" &&
       col("status") === "retained").count() > 0)
+  }
+
+  /** A pages series shaped like the repo benchmark's ingest input: few
+    * urls (2 domains x 4 pages), each crawled every few hours from
+    * 2024-01-01 (a Monday) over 30 days. */
+  private def benchSeries(days: Int) = Pages.toSeries(
+    Pages.synthPages(spark, 300000, nDomains = 2)
+      .filter(regexp_extract(col("url"), "/page/([0-9]+)$", 1).cast("int") < 4)
+      .filter(col("warc_ts_us") < 1704067200000000L + days * CheckpointedRollup.DAY))
+
+  /** Every tier's rows, sorted, with twa_mean compared within 1e-9
+    * relative: a distributed sum adds in task order. */
+  private def assertSameStore(got: String, want: String): Unit =
+    Seq("chunks", "hourly", "distinct", "daily", "weekly").foreach { tier =>
+      def rows(d: String) = {
+        val df = spark.read.parquet(s"$d/$tier")
+        val rest = df.columns.toSeq.filterNot(_ == "twa_mean")
+          .map(c => if (c == "blob") hex(col(c)) else col(c))
+        val twa = if (df.columns.contains("twa_mean")) col("twa_mean") else lit(null).cast("double")
+        df.select(concat_ws("|", rest.map(_.cast("string")): _*), twa).collect()
+          .map(r => (r.getString(0), Option(r.get(1)).map(_.asInstanceOf[Double]))).sortBy(_._1).toSeq
+      }
+      val (a, b) = (rows(got), rows(want))
+      val extra = a.map(_._1).diff(b.map(_._1))
+      assert(a.size == b.size && extra.isEmpty, s"$tier rows differ: ${extra.take(3)}")
+      a.zip(b).foreach {
+        case ((k, Some(x)), (_, Some(y))) =>
+          assert(math.abs(x - y) <= 1e-9 * math.max(math.abs(x), math.abs(y)), s"$tier twa_mean at $k")
+        case ((k, x), (_, y)) => assert(x == y, s"$tier twa_mean at $k")
+      }
+    }
+
+  test("27-day build then 30-day run equals a from-scratch 30-day store") {
+    val fresh = java.nio.file.Files.createTempDirectory("graft_fresh30").toString
+    CheckpointedRollup.run(benchSeries(30), fresh)
+    val dir = java.nio.file.Files.createTempDirectory("graft_append").toString
+    // the cut falls after Saturday 2024-01-27, inside the week of Jan 22
+    CheckpointedRollup.run(benchSeries(27), dir)
+    CheckpointedRollup.run(benchSeries(30), dir)
+    assertSameStore(dir, fresh)
+  }
+
+  test("crash between the append's daily and weekly commits: rerun equals from-scratch") {
+    val fresh = java.nio.file.Files.createTempDirectory("graft_fresh30c").toString
+    CheckpointedRollup.run(benchSeries(30), fresh)
+    val dir = java.nio.file.Files.createTempDirectory("graft_crash_wk").toString
+    CheckpointedRollup.run(benchSeries(27), dir)
+    val weekly = new java.io.File(s"$dir/weekly")
+    val weeklyBuilt = java.nio.file.Files.createTempDirectory("graft_weekly_built").toFile
+    org.apache.commons.io.FileUtils.copyDirectory(weekly, weeklyBuilt)
+    import spark.implicits._
+    def ticks() = CheckpointedRollup.readCheckpoint(spark, dir).as[CheckpointedRollup.Tick].collect()
+    val built = ticks().toSet
+    CheckpointedRollup.run(benchSeries(30), dir)
+    // the crash: daily committed, the weekly tier never ran — its data and
+    // ticks are as the build left them
+    val keep = ticks().filter(t => t.tier != "weekly" || built(t))
+    assert(keep.length < ticks().length, "the append committed no week")
+    val cpPath = CheckpointedRollup.checkpointPath(dir)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(cpPath))
+    keep.toSeq.toDF().coalesce(1).write.parquet(cpPath)
+    org.apache.commons.io.FileUtils.deleteDirectory(weekly)
+    org.apache.commons.io.FileUtils.copyDirectory(weeklyBuilt, weekly)
+    CheckpointedRollup.run(benchSeries(30), dir)
+    assertSameStore(dir, fresh)
+  }
+
+  test("retain refuses a daily horizon shorter than a week") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_retain_guard").toString
+    val day = CheckpointedRollup.DAY
+    val e = intercept[IllegalArgumentException] {
+      CheckpointedRollup.retain(spark, dir, 30 * day, day, day, 6 * day)
+    }
+    assert(e.getMessage.contains("dailyKeepUs"), e.getMessage)
   }
 
   test("retention keeps only fresh raw/hourly/daily and all weekly") {

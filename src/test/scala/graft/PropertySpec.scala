@@ -79,17 +79,17 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("SQL surface: ts_compress/ts_decompress/ts_quantile registered") {
+  test("SQL surface: ts_chunk_encode/ts_chunk_explode round-trip, ts_quantile") {
     GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
-    Seq(("a", Seq(1L, 2L, 5L), Seq(1.0, 1.0, 3.0))).toDF("key", "ts", "vs")
-      .createOrReplaceTempView("raw_series")
+    Seq(("a", 5L, Option(3.0)), ("a", 1L, Option(1.0)), ("a", 2L, Option.empty[Double]))
+      .toDF("key", "t", "v").createOrReplaceTempView("raw_points")
     val out = spark.sql(
-      """SELECT key, p.t, p.v FROM (
-        |  SELECT key, explode(ts_decompress(ts_compress(ts, vs))) AS p FROM raw_series)""".stripMargin)
-      .collect().map(r => (r.getLong(1), r.getDouble(2)))
-    assert(out.toSeq == Seq((1L, 1.0), (2L, 1.0), (5L, 3.0)))
+      """SELECT key, ts_chunk_explode(blob) FROM (
+        |  SELECT key, ts_chunk_encode(t, v) AS blob FROM raw_points GROUP BY key)""".stripMargin)
+      .collect().map(r => (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+    assert(out.toSeq == Seq((1L, Some(1.0)), (2L, None), (5L, Some(3.0))))
     val q = spark.sql("SELECT ts_quantile(map(1.0D, 3.0D, 2.0D, 1.0D), 0.5)").head().getDouble(0)
     assert(q == graft.hist.WeightedQuantile.quantile(Map(1.0 -> 3.0, 2.0 -> 1.0), 0.5).get)
   }
