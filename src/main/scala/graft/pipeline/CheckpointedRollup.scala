@@ -4,8 +4,10 @@ import graft.core.SeriesOps.{K, T, V}
 import graft.regularize.CalendarFloor
 import graft.rollup.Rollup
 import graft.chunk.ChunkOps
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path, RawLocalFileSystem}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** The north-rule end-to-end pipeline: pages → per-url series → compact →
@@ -14,10 +16,16 @@ import org.apache.spark.sql.functions._
   * a rerun resumes idempotently mid-tier (BASELINE.json north_rule).
   *
   * Daily and weekly rows are [[Rollup.rebinStats]] of the tier below (the
-  * lossless cascade). A tick's counts are read back from the partitions the
-  * tier just wrote — `rowCount` rows, `inputRows` = sum of their `n_points`
-  * (the distinct tier, whose registers carry no point count, counts its
-  * input points instead) — so nothing is computed twice to count it.
+  * lossless cascade). A tick's counts are what the committing write
+  * emitted, observed on the write itself — `rowCount` rows, `inputRows` =
+  * sum of their `n_points` (the distinct tier, whose registers carry no
+  * point count, takes its input's per-day point count) — so nothing is
+  * computed or read back to count it.
+  *
+  * The tiers run as three concurrent chains: `chunks`, `distinct`, and
+  * `hourly → daily → weekly`; the first two and `hourly` read only the
+  * persisted series, and each rebinned tier reads its parent after the
+  * parent has committed. Every tier keeps its own lock and tick commit.
   *
   * Open week: a week partition is committed only once the series' last
   * day bucket reaches the week's last day. Until then the week is written
@@ -52,10 +60,12 @@ object CheckpointedRollup {
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
+  /** The checkpoint table, read with the declared [[Tick]] schema so no
+    * schema-inference job runs. */
   def readCheckpoint(spark: SparkSession, dir: String): DataFrame = {
     val (fs, p) = fsOf(spark, checkpointPath(dir))
     if (fs.exists(p))
-      spark.read.parquet(checkpointPath(dir))
+      spark.read.schema(Encoders.product[Tick].schema).parquet(checkpointPath(dir))
     else {
       import spark.implicits._
       Seq.empty[Tick].toDF()
@@ -92,8 +102,26 @@ object CheckpointedRollup {
     fs.delete(staging, true)
   }
 
+  /** Atomic create-if-absent of `file`, opened for writing. HDFS's
+    * `create(overwrite = false)` is atomic; the local filesystem's checks
+    * and then creates, so two acquirers arriving together would both
+    * succeed — there the file is first created exclusively (O_EXCL). */
+  private[graft] def createIfAbsent(fs: FileSystem, file: Path): java.io.OutputStream = {
+    val raw = fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other                 => other
+    }
+    raw match {
+      case local: RawLocalFileSystem =>
+        java.nio.file.Files.createFile(local.pathToFile(file).toPath)
+        try fs.create(file, true)
+        catch { case e: Throwable => fs.delete(file, false); throw e }
+      case _ => fs.create(file, false)
+    }
+  }
+
   /** Cooperative per-tier single-writer lock: atomic create-if-absent of a
-    * lock file (the HDFS namespace primitive). A second driver polls until
+    * lock file ([[createIfAbsent]]). A second driver polls until
     * the holder releases (or the lock goes stale — a crashed holder's lock
     * older than `staleMs` is stolen), then re-reads the checkpoint, so
     * concurrent drivers serialize per tier and each pending partition is
@@ -107,7 +135,7 @@ object CheckpointedRollup {
     var acquired = false
     while (!acquired) {
       try {
-        val out = fs.create(lock, false) // create-if-absent: atomic on HDFS
+        val out = createIfAbsent(fs, lock)
         try {
           out.write(spark.sparkContext.applicationId.getBytes("UTF-8"))
           out.close()
@@ -175,7 +203,7 @@ object CheckpointedRollup {
       spark: SparkSession, dir: String, tier: String, allBuckets: Seq[Long]): Seq[Long] = {
     val done = readCheckpoint(spark, dir)
       .filter(col("tier") === tier && col("status") === "done")
-      .select("partition").distinct()
+      .select("partition")
       .collect().map(_.getLong(0)).toSet
     allBuckets.filterNot(done)
   }
@@ -200,23 +228,42 @@ object CheckpointedRollup {
     * `withSuccessors`, one row per key after the run so keys with no
     * earlier/in-run points still emit their gap-fill default rows. The
     * predecessor/successor lookups are aggregations producing <= one row
-    * per key — no full-history window.
+    * per key — no full-history window. A lookup that is empty by
+    * construction is left out: the carry-in when `lo` is the series' first
+    * day `first`, the successors when `hi` is its last day `last`.
     */
-  private[graft] def runInput(
-      pts: DataFrame, lo: Long, hi: Long, withSuccessors: Boolean): DataFrame = {
+  private[graft] def runInput(pts: DataFrame, lo: Long, hi: Long, withSuccessors: Boolean,
+      first: Long = Long.MinValue, last: Long = Long.MaxValue): DataFrame = {
     val inRange = pts.filter(col(T) >= lo * DAY && col(T) < (hi + 1) * DAY)
       .select(col(K), col(T), col(V))
-    val pred = pts.filter(col(T) < lo * DAY)
-      .groupBy(col(K))
-      .agg(max_by(struct(col(T), col(V)), col(T)).as("_p"))
-      .select(col(K), col("_p").getField(T).as(T), col("_p").getField(V).as(V))
-    val base = inRange.unionByName(pred)
-    if (!withSuccessors) base
-    else base.unionByName(
-      pts.filter(col(T) >= (hi + 1) * DAY)
+    val pred =
+      if (lo <= first) None
+      else Some(pts.filter(col(T) < lo * DAY)
+        .groupBy(col(K))
+        .agg(max_by(struct(col(T), col(V)), col(T)).as("_p"))
+        .select(col(K), col("_p").getField(T).as(T), col("_p").getField(V).as(V)))
+    val succ =
+      if (!withSuccessors || hi >= last) None
+      else Some(pts.filter(col(T) >= (hi + 1) * DAY)
         .groupBy(col(K))
         .agg(min_by(struct(col(T), col(V)), col(T)).as("_s"))
         .select(col(K), col("_s").getField(T).as(T), col("_s").getField(V).as(V)))
+    (pred ++ succ).foldLeft(inRange)(_ unionByName _)
+  }
+
+  /** Runs each chain on its own thread, created here so it inherits the
+    * caller's Spark local properties (job group, scheduler pool), waits for
+    * all of them, then rethrows the first chain's failure. */
+  private def inParallel(chains: (() => Unit)*): Unit = {
+    val failed = new Array[Throwable](chains.size)
+    val threads = chains.zipWithIndex.map { case (chain, i) =>
+      val t = new Thread(() => try chain() catch { case e: Throwable => failed(i) = e },
+        s"graft-rollup-chain-$i")
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    failed.find(_ != null).foreach(e => throw e)
   }
 
   /** Run (or resume) the full tier cascade over a series points DataFrame.
@@ -226,25 +273,32 @@ object CheckpointedRollup {
     *   dir/daily/     (key, bin_start, v, weight)     [rebinned from hourly]
     *   dir/weekly/    (key, bin_start, v, weight)     [rebinned from daily]
     *   dir/_checkpoint/ per-(tier, day-bucket) lineage + row counts
+    * A series with no non-null `t` writes nothing.
     */
   def run(series: DataFrame, dir: String): Unit = {
     val spark = series.sparkSession
     val pts = series.persist()
     try {
-      val (minT, maxT) = {
-        val r = pts.agg(min(T), max(T)).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val allBuckets = (Math.floorDiv(minT, DAY) to Math.floorDiv(maxT, DAY)).toSeq
+      // the one input aggregate: the series' day range and each day's
+      // point count (the distinct tier's input_rows); rows with a null t
+      // fall in no day, and a series without any t writes nothing
+      val day = floor(col(T) / DAY).cast("long")
+      val dayRows = pts.filter(col(T).isNotNull).groupBy(day).agg(count(lit(1)))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      if (dayRows.isEmpty) return
+      val (first, last) = (dayRows.keys.min, dayRows.keys.max)
+      val allBuckets = first to last
+      def input(lo: Long, hi: Long, withSuccessors: Boolean) =
+        runInput(pts, lo, hi, withSuccessors, first, last)
 
       // ---- tier: chunks (raw, compacted, compressed) per day-bucket.
       // Input = pending points + per-key carry-in; compacting that equals
       // filter(compact(full)) because a row's keep/drop decision depends
       // only on its predecessor row, which the carry-in supplies — so chunk
       // contents are independent of which buckets run together.
-      runTier(spark, dir, "chunks", "raw", allBuckets) { buckets =>
+      def chunks() = runTier(spark, dir, "chunks", "raw", allBuckets) { buckets =>
         val rs = contiguousRuns(buckets)
-        val in = rs.map { case (lo, hi) => runInput(pts, lo, hi, withSuccessors = false) }
+        val in = rs.map { case (lo, hi) => input(lo, hi, withSuccessors = false) }
           .reduce(_ unionByName _)
         ChunkOps
           .writeChunks(graft.core.SeriesOps.compact(in), DAY)
@@ -254,10 +308,9 @@ object CheckpointedRollup {
 
       // ---- tier: hourly stats from pending-day points only (+ carry-in /
       // successor rows for exact gap-fill at the run edges)
-      runTier(spark, dir, "hourly", "raw", allBuckets) { buckets =>
+      def hourly() = runTier(spark, dir, "hourly", "raw", allBuckets) { buckets =>
         contiguousRuns(buckets).map { case (lo, hi) =>
-          Rollup.tierStats(runInput(pts, lo, hi, withSuccessors = true),
-            lo * DAY, (hi + 1) * DAY, HOUR)
+          Rollup.tierStats(input(lo, hi, withSuccessors = true), lo * DAY, (hi + 1) * DAY, HOUR)
         }.reduce(_ unionByName _)
           .withColumn("partition", floor(col("bin_start") / DAY).cast("long"))
       }
@@ -268,26 +321,23 @@ object CheckpointedRollup {
       // points (no carry-in/successor rows), so each partition is
       // idempotent by construction; coarser reads (daily/weekly distinct
       // series) are LOSSLESS max-merges of these rows via Hll.merge +
-      // Hll.estimate — verified in PipelineSpec.
-      val day = floor(col(T) / DAY).cast("long")
-      def daysOf(buckets: Seq[Long]) = pts.filter(inRuns(day, contiguousRuns(buckets)))
-      // registers carry no point count, so input_rows is counted on the
-      // INPUT side: a day whose rows all carry null keys yields zero
-      // registers but its lineage must still record what was read
-      val inputDays = (buckets: Seq[Long]) =>
-        daysOf(buckets).groupBy(day.as("partition")).agg(count(lit(1)).as("input_rows"))
-      runTier(spark, dir, "distinct", "raw", allBuckets, inputRows = Some(inputDays)) { buckets =>
+      // Hll.estimate — verified in PipelineSpec. Registers carry no point
+      // count, so input_rows is the day's input count: a day whose rows
+      // all carry null keys yields zero registers but its lineage must
+      // still record what was read.
+      def distinct() = runTier(spark, dir, "distinct", "raw", allBuckets,
+          inputRows = Some(b => dayRows.getOrElse(b, 0L))) { buckets =>
         graft.sketch.Hll.registers(
-          daysOf(buckets).withColumn("hour", floor(col(T) / HOUR).cast("long")),
+          pts.filter(inRuns(day, contiguousRuns(buckets)))
+            .withColumn("hour", floor(col(T) / HOUR).cast("long")),
           Seq("hour"), K)
           .withColumn("partition", floor(col("hour") / lit(24L)).cast("long"))
       }
 
       // ---- tier: daily rebinned FROM hourly (the exact cascade)
-      val hourly = spark.read.parquet(s"$dir/hourly")
-      runTier(spark, dir, "daily", "hourly", allBuckets) { buckets =>
-        Rollup.rebinStats(hourly.filter(inRuns(col("partition"), contiguousRuns(buckets))),
-          Rollup.floorTo(DAY))
+      def daily() = runTier(spark, dir, "daily", "hourly", allBuckets) { buckets =>
+        Rollup.rebinStats(spark.read.parquet(s"$dir/hourly")
+          .filter(inRuns(col("partition"), contiguousRuns(buckets))), Rollup.floorTo(DAY))
           .withColumn("partition", floor(col("bin_start") / DAY).cast("long"))
       }
 
@@ -296,16 +346,19 @@ object CheckpointedRollup {
       // committed only once the series reaches its last day: the open week
       // is written on every run but stays pending, so a later run that
       // brings the rest of its days rebuilds it from daily.
-      val daily = spark.read.parquet(s"$dir/daily")
       def weekOf(c: Column) = floor((c - 4 * DAY) / WEEK).cast("long")
       val weekBuckets = allBuckets.map(b => Math.floorDiv(b * DAY - 4 * DAY, WEEK)).distinct
-      val seriesEnd = (Math.floorDiv(maxT, DAY) + 1) * DAY
-      runTier(spark, dir, "weekly", "daily", weekBuckets,
+      val seriesEnd = (last + 1) * DAY
+      def weekly() = runTier(spark, dir, "weekly", "daily", weekBuckets,
           closed = w => (w + 1) * WEEK + 4 * DAY <= seriesEnd) { buckets =>
-        Rollup.rebinStats(daily.filter(inRuns(weekOf(col("bin_start")), contiguousRuns(buckets))),
-          Rollup.floorWeek)
+        Rollup.rebinStats(spark.read.parquet(s"$dir/daily")
+          .filter(inRuns(weekOf(col("bin_start")), contiguousRuns(buckets))), Rollup.floorWeek)
           .withColumn("partition", weekOf(col("bin_start")))
       }
+
+      // chunks, distinct and hourly read only the persisted series; daily
+      // and weekly each wait for their parent's commit
+      inParallel(() => chunks(), () => distinct(), () => { hourly(); daily(); weekly() })
     } finally pts.unpersist()
   }
 
@@ -364,42 +417,57 @@ object CheckpointedRollup {
     * partitions and overwrites — never appends a second copy into — their
     * directories.
     *
-    * A tick's counts are read back from the partitions just written, in one
-    * aggregate: `rowCount` is the stored row count and `inputRows` the sum
-    * of the rows' `n_points`, unless `inputRows` gives per-partition
-    * (partition, count) rows for a tier whose rows carry no point count.
-    * Lineage names `parent`, the tier the rows were computed from.
+    * A tick counts what the committing write emitted, observed on the write
+    * itself (no read-back): `rowCount` is the partition's written rows and
+    * `inputRows` the sum of their `n_points`, unless `inputRows` gives the
+    * partition's count for a tier whose rows carry no point count. Lineage
+    * names `parent`, the tier the rows were computed from.
     */
   private def runTier(spark: SparkSession, dir: String, tier: String, parent: String,
       allBuckets: Seq[Long], closed: Long => Boolean = _ => true,
-      inputRows: Option[Seq[Long] => DataFrame] = None)(
+      inputRows: Option[Long => Long] = None)(
       rows: Seq[Long] => DataFrame): Unit = withTierLock(spark, dir, tier) {
     // pending re-read INSIDE the lock: a concurrent driver that just
     // finished this tier has already committed its ticks
     val pending = pendingBuckets(spark, dir, tier, allBuckets)
     if (pending.isEmpty) return
-    val out = rows(pending)
-    out.write
+    // observed as the write's last operator, so the metrics come from the
+    // write's result stage and each task's update is applied once
+    val written = Observation()
+    val points = if (inputRows.isEmpty) col("n_points") else lit(0L)
+    rows(pending)
+      .observe(written, partitionCounts(col("partition").cast("long"), points).as("counts"))
+      .write
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
       .partitionBy("partition")
       .parquet(s"$dir/$tier")
     val commit = pending.filter(closed)
     if (commit.isEmpty) return
-    // the written schema, so the partition column reads back as long and an
-    // empty tier directory reads as no rows
-    val written = spark.read.schema(out.schema).parquet(s"$dir/$tier")
-      .filter(inRuns(col("partition"), contiguousRuns(commit)))
-      .groupBy(col("partition"))
-    val counts = inputRows match {
-      case None    => written.agg(count(lit(1)).as("row_count"), sum("n_points").as("input_rows"))
-      case Some(f) => written.agg(count(lit(1)).as("row_count")).join(f(commit), Seq("partition"), "right")
-    }
-    val got = counts.collect().map(r =>
-      r.getLong(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2))).toMap
+    val got = written.get("counts").asInstanceOf[scala.collection.Map[Long, Row]]
     appendCheckpoint(spark, dir, commit.map { b =>
-      val (n, in) = got.getOrElse(b, (0L, 0L))
-      Tick(tier, b, n, in, lineage = s"$tier<-$parent@$b", status = "done")
+      val (n, in) = got.get(b).fold((0L, 0L))(r => (r.getLong(0), r.getLong(1)))
+      Tick(tier, b, n, inputRows.fold(in)(_(b)), lineage = s"$tier<-$parent@$b", status = "done")
     })
   }
+
+  private type Counts = Map[Long, (Long, Long)]
+
+  /** partition -> (rows, sum of point counts) over (partition, points)
+    * rows: the per-partition tick counts, as one observable aggregate. */
+  private object PartitionCounts extends Aggregator[(Long, Long), Counts, Counts] {
+    def zero: Counts = Map.empty
+    def reduce(b: Counts, r: (Long, Long)): Counts = add(b, r._1, 1L, r._2)
+    def merge(a: Counts, b: Counts): Counts =
+      b.foldLeft(a) { case (m, (p, (n, s))) => add(m, p, n, s) }
+    def finish(b: Counts): Counts = b
+    def bufferEncoder: Encoder[Counts] = ExpressionEncoder[Counts]()
+    def outputEncoder: Encoder[Counts] = ExpressionEncoder[Counts]()
+    private def add(m: Counts, p: Long, n: Long, s: Long): Counts = {
+      val (n0, s0) = m.getOrElse(p, (0L, 0L))
+      m.updated(p, (n0 + n, s0 + s))
+    }
+  }
+
+  private val partitionCounts = udaf(PartitionCounts)
 }

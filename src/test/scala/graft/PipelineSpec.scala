@@ -1,6 +1,8 @@
 package graft
 
 import graft.pipeline.{CheckpointedRollup, Pages}
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSpec {
@@ -61,25 +63,7 @@ class PipelineSpec extends SparkSpec {
       directDaily.exceptAll(mergedDaily).isEmpty,
       "distinct tier merge diverged from raw-built registers")
 
-    // lineage counts: every done tick's rowCount is its stored partition's
-    // row count, and inputRows the partition's sum(n_points) wherever the
-    // rows carry one (distinct counts raw input points instead)
-    val ticks = cp.filter(col("status") === "done").collect()
-    Seq("chunks", "hourly", "distinct", "daily", "weekly").foreach { tier =>
-      val rows = spark.read.parquet(s"$dir/$tier")
-      val pointSum = if (tier == "distinct") lit(0L) else sum("n_points")
-      val stored = rows.groupBy(col("partition").cast("long"))
-        .agg(count(lit(1)), pointSum).collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val tierTicks = ticks.filter(_.getString(0) == tier)
-      assert(tierTicks.nonEmpty, s"no $tier ticks")
-      tierTicks.foreach { t =>
-        val (n, in) = stored.getOrElse(t.getLong(1), (0L, 0L))
-        assert(t.getLong(2) == n, s"$tier@${t.getLong(1)}: rowCount ${t.getLong(2)} vs $n stored")
-        if (tier != "distinct")
-          assert(t.getLong(3) == in, s"$tier@${t.getLong(1)}: inputRows ${t.getLong(3)} vs $in")
-      }
-    }
+    assertTickCounts(dir, series)
 
     // resume: drop the checkpoint rows + outputs of one daily partition and rerun
     val victim = cp.filter(col("tier") === "daily").select("partition").head().getLong(0)
@@ -100,6 +84,31 @@ class PipelineSpec extends SparkSpec {
     assert(daily2Rows == daily1Rows, "resume produced different daily rows")
     val cp2 = CheckpointedRollup.readCheckpoint(spark, dir)
     assert(cp2.filter(col("tier") === "daily" && col("partition") === victim).count() == 1)
+  }
+
+  /** Lineage counts: every done tick's rowCount is its stored partition's
+    * row count, and inputRows the partition's sum(n_points) wherever the
+    * rows carry one (distinct: the series' point count of that day). */
+  private def assertTickCounts(dir: String, series: DataFrame): Unit = {
+    val ticks = CheckpointedRollup.readCheckpoint(spark, dir).filter(col("status") === "done").collect()
+    val day = floor(col("t") / CheckpointedRollup.DAY).cast("long")
+    val dayPoints = series.groupBy(day).count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Seq("chunks", "hourly", "distinct", "daily", "weekly").foreach { tier =>
+      val rows = spark.read.parquet(s"$dir/$tier")
+      val pointSum = if (tier == "distinct") lit(0L) else sum("n_points")
+      val stored = rows.groupBy(col("partition").cast("long"))
+        .agg(count(lit(1)), pointSum).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val tierTicks = ticks.filter(_.getString(0) == tier)
+      assert(tierTicks.nonEmpty, s"no $tier ticks")
+      tierTicks.foreach { t =>
+        val (n, storedIn) = stored.getOrElse(t.getLong(1), (0L, 0L))
+        val in = if (tier == "distinct") dayPoints.getOrElse(t.getLong(1), 0L) else storedIn
+        assert(t.getLong(2) == n, s"$tier@${t.getLong(1)}: rowCount ${t.getLong(2)} vs $n stored")
+        assert(t.getLong(3) == in, s"$tier@${t.getLong(1)}: inputRows ${t.getLong(3)} vs $in")
+      }
+    }
   }
 
   test("resume input holds only pending-day points plus <=2 rows per key") {
@@ -261,6 +270,23 @@ class PipelineSpec extends SparkSpec {
     holder.join()
     assert(holderDone > 0 && waiterRan >= holderDone,
       s"waiter entered at $waiterRan before holder finished at $holderDone (start $t0)")
+    // 3) two acquirers arriving at the same moment: exactly one creates the
+    //    lock file (the local filesystem's own create-if-absent lets both in)
+    val raced = new org.apache.hadoop.fs.Path(s"$dir/_locks/raced.lock")
+    val notOne = (1 to 200).count { _ =>
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val won = new java.util.concurrent.atomic.AtomicInteger()
+      val racers = (1 to 2).map(_ => new Thread(() => {
+        start.await()
+        try { CheckpointedRollup.createIfAbsent(fs, raced).close(); won.incrementAndGet() }
+        catch { case _: java.io.IOException => () }
+      }))
+      racers.foreach(_.start())
+      racers.foreach(_.join())
+      fs.delete(raced, false)
+      won.get != 1
+    }
+    assert(notOne == 0, s"in $notOne of 200 rounds, not exactly one creator got the lock file")
   }
 
   test("run -> retain -> resume: surviving tiers identical, nothing re-processed") {
@@ -353,6 +379,7 @@ class PipelineSpec extends SparkSpec {
     CheckpointedRollup.run(benchSeries(27), dir)
     CheckpointedRollup.run(benchSeries(30), dir)
     assertSameStore(dir, fresh)
+    assertTickCounts(dir, benchSeries(30))
   }
 
   test("crash between the append's daily and weekly commits: rerun equals from-scratch") {
@@ -399,5 +426,97 @@ class PipelineSpec extends SparkSpec {
     assert(r.agg(min("t")).head().getLong(0) >= now - day)
     assert(h.agg(min("bin_start")).head().getLong(0) >= now - 2 * day)
     assert(w.count() == hourly.count())
+  }
+
+  test("an empty series, or one whose t values are all null, writes nothing") {
+    val s = spark
+    import s.implicits._
+    val empty = Seq.empty[(String, Long, Double)].toDF("key", "t", "v")
+    val nullT = Seq(("u", Option.empty[Long], 1.0), ("w", Option.empty[Long], 2.0)).toDF("key", "t", "v")
+    Seq(empty, nullT).foreach { pts =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_empty").toFile
+      CheckpointedRollup.run(pts, dir.toString)
+      assert(dir.list().isEmpty, s"run wrote ${dir.list().mkString(", ")}")
+      assert(CheckpointedRollup.readCheckpoint(spark, dir.toString).isEmpty)
+    }
+  }
+
+  test("a run from the series' first to last day reads its points with no lookup aggregate") {
+    val series = Pages.toSeries(Pages.synthPages(spark, 2000))
+    val r = series.agg(min("t"), max("t")).head()
+    val (first, last) = (Math.floorDiv(r.getLong(0), CheckpointedRollup.DAY),
+      Math.floorDiv(r.getLong(1), CheckpointedRollup.DAY))
+    def aggregates(df: DataFrame) = df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.size
+    val whole = CheckpointedRollup.runInput(series, first, last, withSuccessors = true, first, last)
+    assert(aggregates(whole) == 0, whole.queryExecution.optimizedPlan)
+    val points = series.filter(col("t").isNotNull).select("key", "t", "v")
+    assert(whole.exceptAll(points).isEmpty && points.exceptAll(whole).isEmpty)
+    // a run that starts at the first day still looks up its successors
+    val head = CheckpointedRollup.runInput(series, first, first, withSuccessors = true, first, last)
+    assert(aggregates(head) == 1, head.queryExecution.optimizedPlan)
+  }
+
+  test("a failing chain: run throws, releases its locks, commits none of its ticks, reruns clean") {
+    val series = Pages.toSeries(Pages.synthPages(spark, 2000)).persist()
+    val fresh = java.nio.file.Files.createTempDirectory("graft_chain_ref").toString
+    CheckpointedRollup.run(series, fresh)
+    val dir = java.nio.file.Files.createTempDirectory("graft_chain_fail").toString
+    val blocker = new java.io.File(s"$dir/chunks")
+    assert(blocker.createNewFile())
+    intercept[Exception](CheckpointedRollup.run(series, dir))
+    assert(new java.io.File(s"$dir/_locks").list().isEmpty, "a tier lock outlived the run")
+    val cp = CheckpointedRollup.readCheckpoint(spark, dir)
+    assert(cp.filter(col("tier") === "chunks").isEmpty, "the failed chunks write committed ticks")
+    assert(blocker.delete())
+    CheckpointedRollup.run(series, dir)
+    assertSameStore(dir, fresh)
+    val s = spark
+    import s.implicits._
+    def ticks(d: String) = CheckpointedRollup.readCheckpoint(spark, d).as[CheckpointedRollup.Tick]
+      .collect().toSeq.sortBy(t => (t.tier, t.partition))
+    assert(ticks(dir) == ticks(fresh))
+    series.unpersist()
+  }
+
+  test("a resume whose pending partitions hold no rows commits zero-count ticks") {
+    val s = spark
+    import s.implicits._
+    val day = CheckpointedRollup.DAY
+    // no point on day 1: its distinct registers are empty
+    val pts = Seq(("u", day / 2, 1.0), ("w", day / 3, 2.0), ("u", 2 * day + 7, 3.0)).toDF("key", "t", "v")
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_resume").toString
+    CheckpointedRollup.run(pts, dir)
+    def ticks() = CheckpointedRollup.readCheckpoint(spark, dir).as[CheckpointedRollup.Tick].collect().toSet
+    val built = ticks()
+    val gap = CheckpointedRollup.Tick("distinct", 1L, 0L, 0L, "distinct<-raw@1", "done")
+    assert(built(gap), built)
+    val cpPath = CheckpointedRollup.checkpointPath(dir)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(cpPath))
+    (built - gap).toSeq.toDF().coalesce(1).write.parquet(cpPath)
+    CheckpointedRollup.run(pts, dir) // writes no row, still commits the tick
+    assert(ticks() == built)
+  }
+
+  test("readCheckpoint reads the declared Tick schema") {
+    val s = spark
+    import s.implicits._
+    val day = CheckpointedRollup.DAY
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_schema").toString
+    CheckpointedRollup.run(Seq(("u", day / 2, 1.0), ("u", day + 7, 2.0)).toDF("key", "t", "v"), dir)
+    // no job (schema inference) runs to read it: a later job's status is
+    // delivered after any the read started
+    val sc = spark.sparkContext
+    sc.setJobGroup("read-checkpoint", "readCheckpoint")
+    val cp = CheckpointedRollup.readCheckpoint(spark, dir)
+    sc.setJobGroup("after-read", "marker")
+    spark.range(1).count()
+    sc.clearJobGroup()
+    while (sc.statusTracker.getJobIdsForGroup("after-read").isEmpty) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup("read-checkpoint").isEmpty, "reading the checkpoint ran a job")
+    // file sources read every column as nullable, so names and types only
+    def fields(t: org.apache.spark.sql.types.StructType) = t.fields.map(f => (f.name, f.dataType)).toSeq
+    assert(fields(cp.schema) == fields(Encoders.product[CheckpointedRollup.Tick].schema), cp.schema.treeString)
+    val raw = spark.read.parquet(CheckpointedRollup.checkpointPath(dir))
+    assert(cp.exceptAll(raw).isEmpty && raw.exceptAll(cp).isEmpty && !cp.isEmpty)
   }
 }
