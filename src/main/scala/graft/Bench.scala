@@ -157,11 +157,6 @@ object Bench {
     s
   }
 
-  /** Untimed warmup + minimum of `reps` timed runs. Spark's cache is
-    * cleared before every timed run: operators that persist internal
-    * diamonds (BucketedOps) would otherwise be served the warmup's
-    * InMemoryRelation via CacheManager plan-matching, and the "timed" run
-    * would skip the very computation it claims to measure. */
   /** Reclaim cross-job session residue before a measured job starts.
     * Broadcast HashedRelations acquire UNIFIED EXECUTION memory that is
     * only released when a GC collects their weak refs and ContextCleaner
@@ -176,6 +171,10 @@ object Bench {
     Thread.sleep(200) // let ContextCleaner drain its reference queue
   }
 
+  /** Untimed warmup + minimum of `reps` timed runs. Spark's cache is
+    * cleared before every timed run, so no timed run can be served a
+    * relation that an earlier run left cached (CacheManager matches plans,
+    * not runs) and skip the computation it claims to measure. */
   def minOfReps[A](spark: SparkSession, reps: Int)(job: () => A): (A, Double) = {
     reclaim(spark)
     job() // warmup: JIT, codegen cache, parquet footer/page cache
@@ -308,9 +307,11 @@ object Bench {
     val skewRows = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "24000000").toLong
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
+    val qs = SparkEntry.queries
+    val unknown = headline.filterNot(qs.contains)
+    require(unknown.isEmpty, s"headline names not in the registry: ${unknown.mkString(", ")}")
     val spark = session(cpus)
 
-    val qs = SparkEntry.queries
     // SPARK_GRAFT_HEADLINE=0 skips the per-query headline (fast iteration
     // on the throughput/scaling sections; the driver always runs the full
     // default)
@@ -322,17 +323,15 @@ object Bench {
     val headlineSel =
       if (!headlineOn) Seq.empty[String]
       else only.fold(headline)(s => headline.filter(s.contains))
-    val results = headlineSel.flatMap { name =>
-      qs.get(name).map { fn =>
-        val sec =
-          try minOfReps(spark, reps)(() => fn(spark, sfDir).count())._2
-          catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); -1.0 }
-        // stderr progress marker (stdout stays one JSON line): when a fatal
-        // task error kills the local context mid-run, the log shows WHICH
-        // query was in flight instead of an anonymous stage id
-        System.err.println(f"[bench] $name $sec%.3f")
-        name -> sec
-      }
+    val results = headlineSel.map { name =>
+      val sec =
+        try minOfReps(spark, reps)(() => qs(name)(spark, sfDir).count())._2
+        catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); -1.0 }
+      // stderr progress marker (stdout stays one JSON line): when a fatal
+      // task error kills the local context mid-run, the log shows WHICH
+      // query was in flight instead of an anonymous stage id
+      System.err.println(f"[bench] $name $sec%.3f")
+      name -> sec
     }
     def timeOnce(job: () => Long): Double = {
       spark.catalog.clearCache()

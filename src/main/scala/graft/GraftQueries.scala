@@ -63,44 +63,39 @@ object GraftQueries {
     * construction — grouping never changes the min/max of its own group
     * key, `unix_micros` is monotone, the `ts` column is physical INT64
     * micros, and parquet int64 statistics are exact (no truncation).
-    * Falls back to the scan aggregate whenever any row group lacks
-    * statistics, the column is missing, or the path is not one footer. */
+    * `events.parquet` is one file or a directory of `part-*` files; the
+    * `ts` statistics of every row group of every file are folded together.
+    * Falls back to the scan aggregate only when a row group has no `ts`
+    * statistics, the files have no `ts` column, or there is no row group;
+    * any other error (a missing path, a corrupt footer) propagates. */
   def eventBounds(spark: SparkSession, dir: String): (Long, Long) = {
-    try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$dir/events.parquet"), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val blocks = r.getFooter.getBlocks
-        var mn = Long.MaxValue
-        var mx = Long.MinValue
-        var ok = !blocks.isEmpty
-        val bit = blocks.iterator()
-        while (ok && bit.hasNext) {
-          var found = false
-          val cit = bit.next().getColumns.iterator()
-          while (!found && cit.hasNext) {
-            val c = cit.next()
-            if (c.getPath.toDotString == "ts") {
-              found = true
-              c.getStatistics match {
-                case st: org.apache.parquet.column.statistics.LongStatistics
-                    if st.hasNonNullValue =>
-                  mn = math.min(mn, st.getMin)
-                  mx = math.max(mx, st.getMax)
-                case _ => ok = false
-              }
-            }
-          }
-          if (!found) ok = false
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.column.statistics.LongStatistics
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(s"$dir/events.parquet")
+    val fs = path.getFileSystem(conf)
+    val files =
+      if (!fs.getFileStatus(path).isDirectory) Seq(path)
+      else fs.listStatus(path).toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
+    // one entry per row group: its ts (min, max), or None without statistics
+    val groups = files.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try r.getFooter.getBlocks.asScala.toList.map { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == "ts").map(_.getStatistics).collect {
+          case st: LongStatistics if st.hasNonNullValue => (st.getMin, st.getMax)
         }
-        if (ok) return (mn, mx)
       } finally r.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
-    val row = spark.read.parquet(s"$dir/events.parquet")
-      .agg(min(tsUs), max(tsUs)).head()
-    (row.getLong(0), row.getLong(1))
+    }
+    if (groups.nonEmpty && groups.forall(_.isDefined))
+      (groups.flatten.map(_._1).min, groups.flatten.map(_._2).max)
+    else {
+      val row = spark.read.parquet(s"$dir/events.parquet")
+        .agg(min(tsUs), max(tsUs)).head()
+      (row.getLong(0), row.getLong(1))
+    }
   }
 
   private val nullD = lit(null).cast("double")
@@ -8060,7 +8055,7 @@ object GraftQueries {
     // A stateful streaming aggregation opens ONE state store per shuffle
     // partition and pays its open/commit cost every micro-batch — and the
     // executor-side provider registry is a synchronized singleton, so N
-    // simultaneous first-time opens serialize (BenchExtra: the 128-task
+    // simultaneous first-time opens serialize (stage metrics: the 128-task
     // state stage ran 475 ms/task wall at 21 ms/task cpu — pure provider
     // lock wait). The session's 4x-cores shuffle width is sized for batch
     // exchanges where AQE coalesces at runtime; AQE is OFF in streaming,

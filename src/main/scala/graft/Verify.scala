@@ -1,8 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each registry query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -20,17 +20,16 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    SparkEntry.registry
+      .filter(q => only.forall(_.contains(q.name)))
+      .foreach { q =>
+      try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
-      // bucketed operators persist internal diamonds (BucketedOps); drop
-      // them between queries so a 47-query pass doesn't accumulate
-      // dataset-sized cache entries
+      // queries unpersist what they cache; clearing keeps a relation that
+      // a failed query left cached from outliving it
       spark.catalog.clearCache()
       // broadcast HashedRelations hold unified EXECUTION memory until a GC
       // lets ContextCleaner reap them — on a mostly-idle heap a 182-query
@@ -38,6 +37,14 @@ object Verify {
       // UNABLE_TO_ACQUIRE_MEMORY "got 0" after the headline)
       System.gc()
     }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(only.getOrElse(SparkEntry.oracleSql.keySet)))
+    spark.stop()
+  }
+
+  /** `{name: oracle SQL}` as JSON for the registry queries in `names`, in
+    * `SparkEntry.oracleSql`'s iteration order. */
+  def oracleJson(names: Set[String]): String = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -50,10 +57,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+    SparkEntry.oracleSql
+      .filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

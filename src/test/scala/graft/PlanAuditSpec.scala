@@ -34,6 +34,27 @@ class PlanAuditSpec extends SparkSpec {
     assert(!readSchema.contains("props"), s"props not pruned: $readSchema")
   }
 
+  test("eventBounds folds the footers of a part-file directory and runs no job") {
+    val src = "/root/testdata/sf0.001"
+    val dir = java.nio.file.Files.createTempDirectory("graft_event_parts").toString
+    spark.read.parquet(s"$src/events.parquet").repartition(3)
+      .write.parquet(s"$dir/events.parquet")
+    assert(new java.io.File(s"$dir/events.parquet").list().count(_.startsWith("part-")) == 3)
+    val ts = unix_micros(col("ts").cast("timestamp"))
+    val scan = spark.read.parquet(s"$dir/events.parquet").agg(min(ts), max(ts)).head()
+    // a later job's status is delivered after any that eventBounds started
+    val sc = spark.sparkContext
+    sc.setJobGroup("event-bounds", "eventBounds")
+    val got = GraftQueries.eventBounds(spark, dir)
+    sc.setJobGroup("after-bounds", "marker")
+    spark.range(1).count()
+    sc.clearJobGroup()
+    while (sc.statusTracker.getJobIdsForGroup("after-bounds").isEmpty) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup("event-bounds").isEmpty, "eventBounds ran a job")
+    assert(got == ((scan.getLong(0), scan.getLong(1))))
+    assert(GraftQueries.eventBounds(spark, src) == got, "the single-file table disagrees")
+  }
+
   test("grid sampling broadcasts the time axis (no shuffle of the grid)") {
     val pts = GraftQueries.points(spark, "/root/testdata/sf0.001")
     val s = spark; import s.implicits._
