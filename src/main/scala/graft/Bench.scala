@@ -297,7 +297,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     // 8M: the 2M job is fixed-overhead-dominated (~30 stages) — 8M runs in
     // comparable wall-clock and reports the amortized throughput
     val rollupRows = sys.env.getOrElse("SPARK_GRAFT_ROWS", "8000000").toLong

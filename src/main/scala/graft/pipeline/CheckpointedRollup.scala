@@ -5,8 +5,12 @@ import graft.regularize.CalendarFloor
 import graft.rollup.Rollup
 import graft.chunk.ChunkOps
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path, RawLocalFileSystem}
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -26,6 +30,9 @@ import org.apache.spark.sql.functions._
   * `hourly → daily → weekly`; the first two and `hourly` read only the
   * persisted series, and each rebinned tier reads its parent after the
   * parent has committed. Every tier keeps its own lock and tick commit.
+  *
+  * The checkpoint, a few rows per commit, is read and written on the
+  * driver: one reader ([[ticks]]), one writer ([[appendCheckpoint]]).
   *
   * Open week: a week partition is committed only once the series' last
   * day bucket reaches the week's last day. Until then the week is written
@@ -60,46 +67,49 @@ object CheckpointedRollup {
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
-  /** The checkpoint table, read with the declared [[Tick]] schema so no
-    * schema-inference job runs. */
-  def readCheckpoint(spark: SparkSession, dir: String): DataFrame = {
-    val (fs, p) = fsOf(spark, checkpointPath(dir))
-    if (fs.exists(p))
-      spark.read.schema(Encoders.product[Tick].schema).parquet(checkpointPath(dir))
-    else {
-      import spark.implicits._
-      Seq.empty[Tick].toDF()
+  /** Every tick of the checkpoint, read on the driver (no Spark job): each
+    * data file of `_checkpoint`, skipping a Spark writer's `_SUCCESS` and
+    * `.crc` sidecars. A store without a checkpoint has no ticks. */
+  private[graft] def ticks(spark: SparkSession, dir: String): Seq[Tick] = {
+    val (fs, ckpt) = fsOf(spark, checkpointPath(dir))
+    if (!fs.exists(ckpt)) return Nil
+    val data = fs.listStatus(ckpt, (p: Path) => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+    data.toSeq.flatMap { st =>
+      val in = ParquetReader.builder(new GroupReadSupport, st.getPath).withConf(fs.getConf).build()
+      try Iterator.continually(in.read()).takeWhile(_ != null).map { g =>
+        Tick(g.getString("tier", 0), g.getLong("partition", 0), g.getLong("rowCount", 0),
+          g.getLong("inputRows", 0), g.getString("lineage", 0), g.getString("status", 0))
+      }.toVector
+      finally in.close()
     }
   }
 
-  /** Concurrency-safe checkpoint append: the batch is written to a private
-    * staging directory, then each data file is MOVED into the live
-    * checkpoint directory under a globally unique name (applicationId +
-    * UUID). Rename is the atomic commit primitive on HDFS-like stores; on
-    * object stores it is a copy to a unique key — either way two drivers
-    * can append concurrently without clobbering, and a crash mid-append
-    * leaves only an orphaned staging dir, never a half-visible file. A
-    * plain `DataFrameWriter.mode(Append)` on a shared directory would race
-    * on the shared `_temporary` staging tree of the output committer. */
-  private def appendCheckpoint(spark: SparkSession, dir: String, ticks: Seq[Tick]): Unit = {
-    import spark.implicits._
-    if (ticks.isEmpty) return
+  /** The checkpoint as a DataFrame of [[Tick]]s, read on the driver. */
+  def readCheckpoint(spark: SparkSession, dir: String): DataFrame = spark.createDataFrame(ticks(spark, dir))
+
+  /** The parquet schema Spark writes for [[Tick]]. */
+  private val tickSchema = new SparkToParquetSchemaConverter().convert(Encoders.product[Tick].schema)
+
+  /** Concurrency-safe checkpoint append, on the driver (no Spark job): the
+    * batch is written as ONE parquet file under a globally unique name
+    * (applicationId + UUID) in `_checkpoint_staging`, then MOVED into the
+    * live checkpoint directory. That rename is the commit — atomic on
+    * HDFS-like stores, a copy to a unique key on object stores — so two
+    * drivers can append concurrently without clobbering, and a crash
+    * mid-append leaves only an orphaned staging file, never a visible tick. */
+  private[graft] def appendCheckpoint(spark: SparkSession, dir: String, batch: Seq[Tick]): Unit = {
+    if (batch.isEmpty) return
     val (fs, ckpt) = fsOf(spark, checkpointPath(dir))
+    val name = s"${spark.sparkContext.applicationId}-${java.util.UUID.randomUUID}.parquet"
+    val staged = new Path(s"$dir/_checkpoint_staging/$name")
+    val out = ExampleParquetWriter.builder(staged).withConf(fs.getConf).withType(tickSchema).build()
+    try batch.foreach(t => out.write(new SimpleGroup(tickSchema).append("tier", t.tier)
+      .append("partition", t.partition).append("rowCount", t.rowCount)
+      .append("inputRows", t.inputRows).append("lineage", t.lineage).append("status", t.status)))
+    finally out.close()
     fs.mkdirs(ckpt)
-    val batch = s"${spark.sparkContext.applicationId}-${java.util.UUID.randomUUID}"
-    val staging = new Path(s"$dir/_checkpoint_staging/$batch")
-    ticks.toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val parts = fs.listStatus(staging).map(_.getPath).filter(_.getName.startsWith("part-"))
-    // the atomicity claim above holds ONLY because coalesce(1) guarantees a
-    // single part file — one rename = one commit point; a multi-file batch
-    // would need a directory rename or a manifest, so fail fast if the
-    // writer ever stops honoring the coalesce
-    if (parts.length != 1)
-      throw new IllegalStateException(
-        s"checkpoint staging $staging has ${parts.length} part files (expected 1)")
-    if (!fs.rename(parts(0), new Path(ckpt, s"$batch.parquet")))
-      throw new java.io.IOException(s"checkpoint commit rename failed for ${parts(0)}")
-    fs.delete(staging, true)
+    if (!fs.rename(staged, new Path(ckpt, name)))
+      throw new java.io.IOException(s"checkpoint commit rename failed for $staged")
   }
 
   /** Atomic create-if-absent of `file`, opened for writing. HDFS's
@@ -195,17 +205,6 @@ object CheckpointedRollup {
       beat.interrupt()
       fs.delete(lock, false)
     }
-  }
-
-  /** Day-buckets present in the series, minus those already committed for
-    * `tier` — the resume filter. */
-  private def pendingBuckets(
-      spark: SparkSession, dir: String, tier: String, allBuckets: Seq[Long]): Seq[Long] = {
-    val done = readCheckpoint(spark, dir)
-      .filter(col("tier") === tier && col("status") === "done")
-      .select("partition")
-      .collect().map(_.getLong(0)).toSet
-    allBuckets.filterNot(done)
   }
 
   /** Contiguous runs [lo, hi] (inclusive) of a sorted pending-bucket list —
@@ -394,10 +393,8 @@ object CheckpointedRollup {
           // a partition (day bucket) is expired when its whole day lies
           // strictly before the horizon
           val cutoff = Math.floorDiv(nowUs - keepUs, DAY)
-          val cp = readCheckpoint(spark, dir).filter(col("tier") === tier)
-          def parts(status: String): Set[Long] = cp
-            .filter(col("status") === status && col("partition") < cutoff)
-            .select("partition").distinct().collect().map(_.getLong(0)).toSet
+          val cp = ticks(spark, dir).filter(t => t.tier == tier && t.partition < cutoff)
+          def parts(status: String): Set[Long] = cp.filter(_.status == status).map(_.partition).toSet
           val todo = (parts("done") -- parts("retained")).toSeq.sorted
           if (todo.nonEmpty) {
             val (fs, base) = fsOf(spark, s"$dir/$tier")
@@ -427,9 +424,10 @@ object CheckpointedRollup {
       allBuckets: Seq[Long], closed: Long => Boolean = _ => true,
       inputRows: Option[Long => Long] = None)(
       rows: Seq[Long] => DataFrame): Unit = withTierLock(spark, dir, tier) {
-    // pending re-read INSIDE the lock: a concurrent driver that just
-    // finished this tier has already committed its ticks
-    val pending = pendingBuckets(spark, dir, tier, allBuckets)
+    // the resume filter, re-read INSIDE the lock: a concurrent driver that
+    // just finished this tier has already committed its ticks
+    val done = ticks(spark, dir).collect { case Tick(`tier`, b, _, _, _, "done") => b }.toSet
+    val pending = allBuckets.filterNot(done)
     if (pending.isEmpty) return
     // observed as the write's last operator, so the metrics come from the
     // write's result stage and each task's update is applied once

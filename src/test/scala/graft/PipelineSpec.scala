@@ -503,20 +503,71 @@ class PipelineSpec extends SparkSpec {
     val day = CheckpointedRollup.DAY
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_schema").toString
     CheckpointedRollup.run(Seq(("u", day / 2, 1.0), ("u", day + 7, 2.0)).toDF("key", "t", "v"), dir)
-    // no job (schema inference) runs to read it: a later job's status is
-    // delivered after any the read started
-    val sc = spark.sparkContext
-    sc.setJobGroup("read-checkpoint", "readCheckpoint")
-    val cp = CheckpointedRollup.readCheckpoint(spark, dir)
-    sc.setJobGroup("after-read", "marker")
-    spark.range(1).count()
-    sc.clearJobGroup()
-    while (sc.statusTracker.getJobIdsForGroup("after-read").isEmpty) Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup("read-checkpoint").isEmpty, "reading the checkpoint ran a job")
-    // file sources read every column as nullable, so names and types only
-    def fields(t: org.apache.spark.sql.types.StructType) = t.fields.map(f => (f.name, f.dataType)).toSeq
-    assert(fields(cp.schema) == fields(Encoders.product[CheckpointedRollup.Tick].schema), cp.schema.treeString)
+    val cp = assertNoJob("readCheckpoint")(CheckpointedRollup.readCheckpoint(spark, dir))
+    assert(cp.schema == Encoders.product[CheckpointedRollup.Tick].schema, cp.schema.treeString)
     val raw = spark.read.parquet(CheckpointedRollup.checkpointPath(dir))
     assert(cp.exceptAll(raw).isEmpty && raw.exceptAll(cp).isEmpty && !cp.isEmpty)
+  }
+
+  test("checkpoint bookkeeping starts no Spark job: reading ticks and appending a batch") {
+    val s = spark
+    import s.implicits._
+    val day = CheckpointedRollup.DAY
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_driver").toString
+    CheckpointedRollup.run(Seq(("u", day / 2, 1.0), ("u", day + 7, 2.0)).toDF("key", "t", "v"), dir)
+    val tick = CheckpointedRollup.Tick("hourly", 9L, 0L, 0L, "hourly<-raw@9", "done")
+    val (before, rows, after) = assertNoJob("checkpoint bookkeeping") {
+      val before = CheckpointedRollup.ticks(spark, dir)
+      val rows = CheckpointedRollup.readCheckpoint(spark, dir).collect()
+      CheckpointedRollup.appendCheckpoint(spark, dir, Seq(tick))
+      (before, rows, CheckpointedRollup.ticks(spark, dir))
+    }
+    assert(before.nonEmpty && rows.length == before.size)
+    assert(after.sortBy(_.toString) == (before :+ tick).sortBy(_.toString))
+  }
+
+  test("a fault in a tick commit or a tier write: run throws, leaves no lock or tick of it, reruns clean") {
+    spark.sparkContext.hadoopConfiguration.set("fs.faultfs.impl", classOf[graft.FaultyFs].getName)
+    val series = Pages.toSeries(Pages.synthPages(spark, 2000)).persist()
+    val fresh = java.nio.file.Files.createTempDirectory("graft_fault_ref").toString
+    CheckpointedRollup.run(series, fresh)
+    val s = spark
+    import s.implicits._
+    def ticks(d: String) = CheckpointedRollup.readCheckpoint(spark, d).as[CheckpointedRollup.Tick]
+      .collect().toSeq.sortBy(t => (t.tier, t.partition))
+    val all = Set("chunks", "hourly", "distinct", "daily", "weekly")
+    // the tiers whose commits each fault stops: a failed hourly write
+    // also stops the daily and weekly tiers chained after it
+    Seq("staging" -> all, "commit" -> all, "hourly" -> Set("hourly", "daily", "weekly")).foreach {
+      case (point, stopped) =>
+        val local = java.nio.file.Files.createTempDirectory(s"graft_fault_$point").toString
+        val dir = s"faultfs:$local/out"
+        graft.FaultyFs.at = Some(point)
+        val e = try intercept[Exception](CheckpointedRollup.run(series, dir))
+          finally graft.FaultyFs.at = None
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains(s"injected $point fault")), e)
+        assert(new java.io.File(s"$local/out/_locks").list().isEmpty, s"$point: a tier lock outlived the run")
+        val leaked = ticks(dir).filter(t => stopped(t.tier))
+        assert(leaked.isEmpty, s"$point: the failed commit left ticks ${leaked.take(3)}")
+        CheckpointedRollup.run(series, dir)
+        assertSameStore(dir, fresh)
+        assert(ticks(dir) == ticks(fresh), point)
+    }
+    series.unpersist()
+  }
+
+  /** Runs `body` in a job group of its own and asserts it started no Spark
+    * job: a marker job's status is delivered after any the body started. */
+  private def assertNoJob[A](what: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val (group, marker) = (s"no-job-${java.util.UUID.randomUUID}", s"marker-${java.util.UUID.randomUUID}")
+    sc.setJobGroup(group, what)
+    val out = try body finally sc.setJobGroup(marker, "marker")
+    spark.range(1).count()
+    sc.clearJobGroup()
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty, s"$what ran a job")
+    out
   }
 }
