@@ -12,9 +12,17 @@ import graft.regularize.Regularize
 import graft.rollup.Rollup
 import graft.stats.StatsOps
 import graft.text.TextOps
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.statistics.LongStatistics
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** The driver-facing query battery: one entry per implemented operator
   * (SURVEY.md §2 inventory + training-data ops), each with a DuckDB oracle
@@ -34,66 +42,110 @@ object GraftQueries {
   final val WEEK_SHIFT = 4 * DAY // epoch day 0 is a Thursday; Monday alignment
 
   // ---------- loaders ----------
+  //
+  // The only code that knows where the sf tables live and what their
+  // columns are. `<dir>/<name>.parquet` is one file or a directory of
+  // `part-*` files. Each table has one declared schema, in footer column
+  // order; `table` checks it against every data file's footer on the
+  // driver and then reads with it, so building a query never starts the
+  // schema-inference job that `spark.read.parquet` would. A footer that
+  // differs in a column's name, type or position fails before any job
+  // starts, naming the table and the column; nullability is not compared
+  // (file sources read every column as nullable). There is no fallback to
+  // inference.
+
+  private val schemas: Map[String, StructType] = Map(
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, " +
+      "value DOUBLE, props STRING"),
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, " +
+      "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, " +
+      "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ")
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
+
+  private def tableFile(name: String): String = s"$name.parquet"
+
+  /** The footer of each data file of table `name`, read on the driver. */
+  private def footers(spark: SparkSession, dir: String, name: String): Seq[(Path, ParquetMetadata)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(dir, tableFile(name))
+    val fs = path.getFileSystem(conf)
+    val files =
+      if (!fs.getFileStatus(path).isDirectory) Seq(path)
+      else fs.listStatus(path).toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
+    require(files.nonEmpty, s"$name table: no part-* file in $path")
+    files.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try f -> r.getFooter finally r.close()
+    }
+  }
+
+  /** `t` with every field, element and value nullable. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
+  }
+
+  private def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val declared = schemas(name)
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    footers(spark, dir, name).foreach { case (file, footer) =>
+      val found = converter.convert(footer.getFileMetaData.getSchema).fields.map(Some(_))
+      declared.fields.map(Some(_)).zipAll(found, None, None).collectFirst {
+        case (Some(d), None) => s"column ${d.name} is missing"
+        case (None, Some(f)) => s"column ${f.name} is not declared"
+        case (Some(d), Some(f)) if d.name != f.name => s"column ${d.name} is ${f.name} in the footer"
+        case (Some(d), Some(f)) if nullable(d.dataType) != nullable(f.dataType) =>
+          s"column ${d.name} is ${f.dataType.sql}, declared ${d.dataType.sql}"
+      }.foreach(m => throw new IllegalArgumentException(s"$name table at $file: $m"))
+    }
+    spark.read.schema(declared).parquet(new Path(dir, tableFile(name)).toString)
+  }
+
+  def events(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "events")
+
+  def docs(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
+
+  def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
+
+  def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
 
   /** events -> series points (key = event_type, t = µs, v = value), with
     * SortedDict overwrite semantics for duplicate (key, t): keep max(v)
     * (deterministic in any engine). */
   def points(spark: SparkSession, dir: String): DataFrame =
-    spark.read
-      .parquet(s"$dir/events.parquet")
+    events(spark, dir)
       .groupBy(col("event_type").as("key"), tsUs.as("t"))
       .agg(max("value").as("v"))
 
-  def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
-  def embeddings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
-
-  def bounds(pts: DataFrame): (Long, Long) = {
-    val r = pts.agg(min("t"), max("t")).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
   /** Exact (min, max) event time of the sf directory, served from the
     * parquet FOOTER statistics — manual aggregate pushdown (guide §6:
-    * min/max should come from scan metadata, not a scan). 29 queries run
-    * `bounds(points(...))` at build time, each paying a scan + two
-    * aggregate stages for two longs; the value is identical by
-    * construction — grouping never changes the min/max of its own group
-    * key, `unix_micros` is monotone, the `ts` column is physical INT64
-    * micros, and parquet int64 statistics are exact (no truncation).
-    * `events.parquet` is one file or a directory of `part-*` files; the
-    * `ts` statistics of every row group of every file are folded together.
-    * Falls back to the scan aggregate only when a row group has no `ts`
-    * statistics, the files have no `ts` column, or there is no row group;
-    * any other error (a missing path, a corrupt footer) propagates. */
+    * min/max should come from scan metadata, not a scan). 29 queries need
+    * the bounds of `points` at build time, where a scan aggregate would
+    * pay a scan + two aggregate stages for two longs; the value is
+    * identical by construction — grouping never changes the min/max of
+    * its own group key, `unix_micros` is monotone, the `ts` column is
+    * physical INT64 micros, and parquet int64 statistics are exact (no
+    * truncation). The `ts` statistics of every row group of every data
+    * file are folded together. Falls back to the scan aggregate only when
+    * a row group has no `ts` statistics or there is no row group; any
+    * other error (a missing path, a corrupt footer) propagates. */
   def eventBounds(spark: SparkSession, dir: String): (Long, Long) = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.column.statistics.LongStatistics
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(s"$dir/events.parquet")
-    val fs = path.getFileSystem(conf)
-    val files =
-      if (!fs.getFileStatus(path).isDirectory) Seq(path)
-      else fs.listStatus(path).toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
     // one entry per row group: its ts (min, max), or None without statistics
-    val groups = files.flatMap { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try r.getFooter.getBlocks.asScala.toList.map { b =>
+    val groups = footers(spark, dir, "events").flatMap { case (_, footer) =>
+      footer.getBlocks.asScala.toList.map { b =>
         b.getColumns.asScala.find(_.getPath.toDotString == "ts").map(_.getStatistics).collect {
           case st: LongStatistics if st.hasNonNullValue => (st.getMin, st.getMax)
         }
-      } finally r.close()
+      }
     }
     if (groups.nonEmpty && groups.forall(_.isDefined))
       (groups.flatten.map(_._1).min, groups.flatten.map(_._2).max)
     else {
-      val row = spark.read.parquet(s"$dir/events.parquet")
-        .agg(min(tsUs), max(tsUs)).head()
+      val row = events(spark, dir).agg(min(tsUs), max(tsUs)).head()
       (row.getLong(0), row.getLong(1))
     }
   }
@@ -459,8 +511,7 @@ object GraftQueries {
          |FROM cells WHERE c1 > c0 GROUP BY 1, 2, 3""".stripMargin
 
   def qCountByValue(spark: SparkSession, dir: String): DataFrame = {
-    val df = spark.read
-      .parquet(s"$dir/events.parquet")
+    val df = events(spark, dir)
       .groupBy(col("event_type").as("sid"), tsUs.as("t"))
       .agg(floor(max("value") / 100).cast("double").as("v"))
     MergeOps.countByValue(df, bucketBy = dayBucket)
@@ -585,8 +636,7 @@ object GraftQueries {
     * differently than the oracle's serial scan), so the query pins
     * order-exact integer arithmetic — the operator itself is unchanged. */
   def qMergeSum(spark: SparkSession, dir: String): DataFrame = {
-    val df = spark.read
-      .parquet(s"$dir/events.parquet")
+    val df = events(spark, dir)
       .groupBy(col("event_type").as("sid"), tsUs.as("t"))
       .agg(floor(max("value")).cast("double").as("v"))
       .withColumn("key", constKey("all", col("sid")))
@@ -617,8 +667,7 @@ object GraftQueries {
     * with per-series default 0. The sid list is collected driver-side —
     * the reference's ts_list is equally an in-memory enumeration. */
   def qMergeMax(spark: SparkSession, dir: String): DataFrame = {
-    val df = spark.read
-      .parquet(s"$dir/events.parquet")
+    val df = events(spark, dir)
       .groupBy(col("event_type").as("sid"), tsUs.as("t"))
       // measured nulls coalesce to the same 0.0 default the oracle uses:
       // the SQL's coalesce(p.v, 0.0) cannot distinguish a measured None
@@ -653,8 +702,7 @@ object GraftQueries {
     * exploded to (t, slot, v) rows so the oracle hashes scalars; slot i =
     * i-th sid in name order, default 0 before a series' first point. */
   def qIterMerge(spark: SparkSession, dir: String): DataFrame = {
-    val df = spark.read
-      .parquet(s"$dir/events.parquet")
+    val df = events(spark, dir)
       .groupBy(col("event_type").as("sid"), tsUs.as("t"))
       .agg(coalesce(max("value"), lit(0.0)).as("v")) // see qMergeMax note
       .withColumn("key", constKey("all", col("sid")))
@@ -685,8 +733,7 @@ object GraftQueries {
     * timeseries.py:1006-1046): one row per measurement with the series'
     * previous value attached (default before the first). */
   def qMergeTransitions(spark: SparkSession, dir: String): DataFrame = {
-    val df = spark.read
-      .parquet(s"$dir/events.parquet")
+    val df = events(spark, dir)
       .groupBy(col("event_type").as("sid"), tsUs.as("t"))
       .agg(coalesce(max("value"), lit(0.0)).as("v")) // see qMergeMax note
       .withColumn("key", constKey("all", col("sid")))
@@ -706,7 +753,7 @@ object GraftQueries {
       |FROM pts""".stripMargin
 
   def qCountActive(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = events(spark, dir)
     val open = ev.filter(col("value") >= 100)
       .select(constKey("all", col("event_type")).as("key"), tsUs.as("t"))
     val closed = ev.filter(col("value") < 100)
@@ -724,7 +771,7 @@ object GraftQueries {
 
   def qCumsum(spark: SparkSession, dir: String): DataFrame =
     EventOps
-      .cumulativeSum(spark.read.parquet(s"$dir/events.parquet")
+      .cumulativeSum(events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")))
       .withColumn("v", col("v").cast("long"))
 
@@ -735,7 +782,7 @@ object GraftQueries {
       |FROM e""".stripMargin
 
   def qInterevent(spark: SparkSession, dir: String): DataFrame =
-    EventOps.interEventTimes(spark.read.parquet(s"$dir/events.parquet")
+    EventOps.interEventTimes(events(spark, dir)
       .select(col("event_type").as("key"), tsUs.as("t")))
 
   val sqlInterevent: String =
@@ -747,7 +794,7 @@ object GraftQueries {
   def qEventsBetween(spark: SparkSession, dir: String): DataFrame = {
     val jan2 = 1704153600000000L
     EventOps.eventsBetween(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")),
       lit(jan2), lit(jan2 + 7 * DAY))
   }
@@ -1774,8 +1821,7 @@ object GraftQueries {
     * SortedDict overwrite = last write wins; event_id is insertion order,
     * so max_by(event_type, event_id) is the deterministic tiebreak. */
   def statePoints(spark: SparkSession, dir: String): DataFrame =
-    spark.read
-      .parquet(s"$dir/events.parquet")
+    events(spark, dir)
       .groupBy(col("user_id").as("key"), tsUs.as("t"))
       .agg(max_by(col("event_type"), col("event_id")).as("sv"))
 
@@ -3065,7 +3111,7 @@ object GraftQueries {
     * (SessionizeSpec) and head-to-head benched in the skew section. */
   def qSessionize(spark: SparkSession, dir: String): DataFrame =
     graft.events.EventOps.sessionize(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       gap = 12L * 3600 * 1000000,
       bucketBy = None)
@@ -3188,7 +3234,7 @@ object GraftQueries {
     * exercised). */
   def qTierPercentiles(spark: SparkSession, dir: String): DataFrame =
     Rollup.tierPercentiles(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t"), col("value").as("v")),
       startUs = 1704067200000000L, endUs = 1706745600000000L,
       stepUs = HOUR, qs = Seq(0.5, 0.9, 0.99))
@@ -3216,7 +3262,7 @@ object GraftQueries {
   /** Rolling z-score anomalies per user (24-event lookback, |z| > 2.5). */
   def qRollingZscore(spark: SparkSession, dir: String): DataFrame =
     graft.events.EventOps.rollingZscore(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       lookback = 24, threshold = 2.5)
       .select(col("key").as("user_id"), col("t"), col("v"), col("z"), col("anomaly"))
@@ -3239,7 +3285,7 @@ object GraftQueries {
     * hourly mean (availability time = bin close), on the skew-safe
     * bucketed carry — checked against DuckDB's native ASOF JOIN. */
   def qAsofEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = events(spark, dir)
       .select(col("user_id").as("key"), tsUs.as("t"),
         col("event_id"), col("event_type"), col("value").as("v"))
     val hourly = ev
@@ -3270,7 +3316,7 @@ object GraftQueries {
     * points with the deterministic (t, v) tiebreak. */
   def qM4Downsample(spark: SparkSession, dir: String): DataFrame =
     Rollup.m4(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t"), col("value").as("v")),
       startUs = 1704067200000000L, stepUs = 6 * HOUR)
       .select(col("key").as("event_type"), col("bin_start"), col("n_points"),
@@ -3344,7 +3390,7 @@ object GraftQueries {
   /** PromQL-style counter rate per user (per-second, reset-aware). */
   def qCounterRate(spark: SparkSession, dir: String): DataFrame =
     graft.events.EventOps.counterRate(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")))
       .select(col("key").as("user_id"), col("t"), col("increase"), col("rate"))
 
@@ -3381,7 +3427,7 @@ object GraftQueries {
   /** Hour-of-day seasonal baseline residuals per event_type (3σ flags). */
   def qSeasonalResidual(spark: SparkSession, dir: String): DataFrame =
     graft.events.EventOps.seasonalResidual(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t"), col("value").as("v")))
       .select(col("key").as("event_type"), col("t"), col("v"),
         col("season_bin"), col("baseline"), col("residual"), col("anomaly"))
@@ -3409,7 +3455,7 @@ object GraftQueries {
     * vs the rest (10 bins over [0, 400], edge-clamped). */
   def qPsiDrift(spark: SparkSession, dir: String): DataFrame =
     graft.events.EventOps.psiDrift(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t"), col("value").as("v")),
       splitT = 1705363200000000L, lo = 0.0, hi = 400.0, nBins = 10)
       .select(col("key").as("event_type"), col("n_a"), col("n_b"),
@@ -3443,12 +3489,12 @@ object GraftQueries {
     * long". Bucketed range join, 6h buckets. */
   def qIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
     val sess = graft.events.EventOps.sessionize(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       gap = 12L * 3600 * 1000000)
       .select(col("key"), col("t_start").as("a0"),
         (col("t_end") + 1L).as("a1"), col("n_events").cast("double").as("av"))
-    val wins = spark.read.parquet(s"$dir/events.parquet")
+    val wins = events(spark, dir)
       .select(col("user_id").as("key")).distinct()
       .select(col("key"), explode(sequence(lit(0L), lit(29L))).as("_d"))
       .select(col("key"),
@@ -3490,7 +3536,7 @@ object GraftQueries {
   /** Weekly cohort retention triangle over January (origin = Jan 1). */
   def qCohortRetention(spark: SparkSession, dir: String): DataFrame =
     graft.events.EventOps.cohortRetention(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t")),
       originUs = 1704067200000000L)
 
@@ -3512,7 +3558,7 @@ object GraftQueries {
   /** signup → click → purchase funnel per user (strictly-after steps). */
   def qFunnel(spark: SparkSession, dir: String): DataFrame =
     graft.events.EventOps.funnel(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"),
           col("event_type").as("step")),
       steps = Seq("signup", "click", "purchase"))
@@ -3545,7 +3591,7 @@ object GraftQueries {
     * rows-only check (round-4 verdict #5). */
   def qEwma(spark: SparkSession, dir: String): DataFrame =
     graft.regularize.Regularize.ewmaGrid(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       tauUs = HOUR.toDouble, bucketMicros = 12 * HOUR)
       .select(col("key").as("user_id"), col("t"), col("v"),
@@ -3619,7 +3665,7 @@ object GraftQueries {
     * integer-exact on the 1e-6 grid. */
   def qCusum(spark: SparkSession, dir: String): DataFrame =
     graft.events.EventOps.cusum(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t"), col("value").as("v")))
       .select(col("key").as("event_type"), col("t"), col("v"),
         col("cusum_pos"), col("cusum_neg"), col("changepoint"))
@@ -3662,7 +3708,7 @@ object GraftQueries {
     * (the continuous-aggregate property for count-distinct tiers). */
   def qKmvDistinct(spark: SparkSession, dir: String): DataFrame = {
     val k = 32
-    val e = spark.read.parquet(s"$dir/events.parquet")
+    val e = events(spark, dir)
       .select(col("event_type"), tsUs.as("t"), col("user_id"))
       .withColumn("hour", floor(col("t") / HOUR))
     val hourly = graft.sketch.Kmv.sketch(e, Seq("event_type", "hour"), "user_id", k)
@@ -3698,7 +3744,7 @@ object GraftQueries {
     * oracle replays dead-man's-switch gap detection + day splitting. */
   def qDowntime(spark: SparkSession, dir: String): DataFrame =
     graft.events.EventOps.downtime(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t")),
       heartbeatUs = 12 * HOUR,
       bucketBy = Some(floor(col("t") / WEEK)))
@@ -3731,7 +3777,7 @@ object GraftQueries {
     * running-max SQL. */
   def qIntervalUnion(spark: SparkSession, dir: String): DataFrame =
     graft.core.SeriesOps.intervalUnion(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t0"),
           (tsUs + 30L * 60L * 1000000L).as("t1")),
       bucketBy = None)
@@ -3761,7 +3807,7 @@ object GraftQueries {
     * every fifth user; exact_n rides along to show the ≤ εN overshoot. */
   def qCmsFreq(spark: SparkSession, dir: String): DataFrame = {
     val (d, w) = (4, 256)
-    val e = spark.read.parquet(s"$dir/events.parquet")
+    val e = events(spark, dir)
       .select(col("event_type"), tsUs.as("t"), col("user_id"))
       .withColumn("hour", floor(col("t") / HOUR))
     val hourly = graft.sketch.CountMin.sketch(
@@ -3810,7 +3856,7 @@ object GraftQueries {
     * count, and the 2⁶⁰/θ scale-up bit-for-bit. */
   def qKmvIntersect(spark: SparkSession, dir: String): DataFrame = {
     val k = 32
-    val e = spark.read.parquet(s"$dir/events.parquet")
+    val e = events(spark, dir)
       .select(col("event_type"), tsUs.as("t"), col("user_id"))
       .withColumn("day", floor(col("t") / DAY))
     def side(et: String) = graft.sketch.Kmv.sketch(
@@ -3862,7 +3908,7 @@ object GraftQueries {
     * recursive CTE and the driver hash closes (round-4 verdict #5). */
   def qHoltTrend(spark: SparkSession, dir: String): DataFrame =
     graft.regularize.Regularize.holtGrid(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       tauLevelUs = HOUR.toDouble, tauTrendUs = 3.0 * HOUR,
       bucketMicros = 12 * HOUR)
@@ -3968,7 +4014,7 @@ object GraftQueries {
     * the cumulative-rank interpolation bit-for-bit. */
   def qHistQuantile(spark: SparkSession, dir: String): DataFrame = {
     val (lo, hi, nb) = (0.0, 500.0, 50)
-    val e = spark.read.parquet(s"$dir/events.parquet")
+    val e = events(spark, dir)
       .select(col("event_type"), tsUs.as("t"), col("value"))
       .withColumn("hour", floor(col("t") / HOUR))
     val hourly = graft.sketch.GridHist.sketch(
@@ -4009,7 +4055,7 @@ object GraftQueries {
     * grid, join and Pearson ratio. */
   def qAcf(spark: SparkSession, dir: String): DataFrame =
     graft.events.Correlation.autocorr(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       lags = Seq(1, 2, 3), binUs = HOUR, minPairs = 8)
       .select(col("key").as("user_id"), col("lag").as("lag_h"),
@@ -4043,7 +4089,7 @@ object GraftQueries {
     * integers, so the statistics are exact with no quantization). */
   def qXcorr(spark: SparkSession, dir: String): DataFrame =
     graft.events.Correlation.crossCorr(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")),
       keyA = "click", keyB = "view",
       lags = Seq(-2, -1, 0, 1, 2), binUs = HOUR, minBins = 8)
@@ -4079,7 +4125,7 @@ object GraftQueries {
     * construction. */
   def qTheilSen(spark: SparkSession, dir: String): DataFrame =
     graft.events.Correlation.theilSen(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       bucketUs = WEEK, perUs = HOUR)
       .select(col("key").as("user_id"), col("bucket").as("week"),
@@ -4103,7 +4149,7 @@ object GraftQueries {
     * to 6 dp from exact sums so the area argmax is engine-exact. */
   def qLttb(spark: SparkSession, dir: String): DataFrame =
     Rollup.lttb(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t"), col("value").as("v")),
       startUs = 1704067200000000L, stepUs = 6 * HOUR)
       .select(col("key").as("event_type"), col("bin_start"), col("t"), col("v"))
@@ -4146,7 +4192,7 @@ object GraftQueries {
     * are motif candidates. */
   def qSax(spark: SparkSession, dir: String): DataFrame =
     Rollup.saxWords(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       wordUs = DAY, segUs = 3 * HOUR, alphabet = 4, lo = 0.0, hi = 500.0)
       .select(col("key").as("user_id"), col("word_start"), col("word"),
@@ -4182,7 +4228,7 @@ object GraftQueries {
     * tie-break. */
   def qSaxDiscord(spark: SparkSession, dir: String): DataFrame =
     Rollup.saxDiscord(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       wordUs = DAY, segUs = 3 * HOUR, alphabet = 4, lo = 0.0, hi = 500.0)
       .select(col("key").as("user_id"), col("discord_start"), col("word"),
@@ -4224,7 +4270,7 @@ object GraftQueries {
     * report; exact long arithmetic end to end. */
   def qTopGaps(spark: SparkSession, dir: String): DataFrame =
     EventOps.topGaps(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t")),
       k = 3)
       .select(col("key").as("user_id"), col("gap_rank"),
@@ -4299,7 +4345,7 @@ object GraftQueries {
     * both exact medians (halves/quarters) bit-identical cross-engine. */
   def qMadAnomaly(spark: SparkSession, dir: String): DataFrame =
     EventOps.madAnomaly(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       bucketUs = WEEK, nMad = 3.5, minN = 4)
       .select(col("key").as("user_id"), col("bucket").as("week"),
@@ -4334,7 +4380,7 @@ object GraftQueries {
     * flag needs a rounding step. */
   def qLevelShift(spark: SparkSession, dir: String): DataFrame =
     EventOps.levelShift(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       w = 12, threshold = 25.0)
       .select(col("key").as("user_id"), col("t"), col("v"),
@@ -4373,7 +4419,7 @@ object GraftQueries {
     * #6). */
   def qDtw(spark: SparkSession, dir: String): DataFrame =
     graft.events.Correlation.dtwPairs(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t"),
           col("value").as("v")),
       binUs = HOUR, band = 16)
@@ -4440,7 +4486,7 @@ object GraftQueries {
     * hours free. */
   def qBurstRate(spark: SparkSession, dir: String): DataFrame =
     EventOps.burstRate(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")),
       baseHours = 24, factor = 2)
       .select(col("key").as("event_type"), col("hour"), col("n"),
@@ -4468,7 +4514,7 @@ object GraftQueries {
     * median slope. */
   def qOlsTrend(spark: SparkSession, dir: String): DataFrame =
     EventOps.olsTrend(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       bucketUs = WEEK, minN = 3)
       .select(col("key").as("user_id"), col("bucket").as("week"), col("n"),
@@ -4505,7 +4551,7 @@ object GraftQueries {
     * frontier row per user per iteration. */
   def qDebounce(spark: SparkSession, dir: String): DataFrame =
     EventOps.debounce(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t")),
       cooldownUs = 2 * HOUR)
       .select(col("key").as("user_id"), col("t"))
@@ -4528,7 +4574,7 @@ object GraftQueries {
     * reported doubles are one division each. */
   def qSeasonalMase(spark: SparkSession, dir: String): DataFrame =
     graft.events.Correlation.seasonalNaive(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t"),
           col("value").as("v")),
       season = 24, binUs = HOUR, minPairs = 8)
@@ -4575,7 +4621,7 @@ object GraftQueries {
     * convention. */
   def qCalendarHeatmap(spark: SparkSession, dir: String): DataFrame =
     Rollup.calendarHeatmap(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")))
       .select(col("key").as("event_type"), col("weekday"), col("hour"),
         col("n"), col("share"))
@@ -4600,7 +4646,7 @@ object GraftQueries {
     * kept value forward. */
   def qDeadband(spark: SparkSession, dir: String): DataFrame =
     EventOps.deadband(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"),
           col("value").as("v")),
       delta = 20.0)
@@ -4627,7 +4673,7 @@ object GraftQueries {
     * smallest lag) — one max_by aggregate over the q118 CCF sweep. */
   def qBestLag(spark: SparkSession, dir: String): DataFrame =
     graft.events.Correlation.bestLag(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")),
       keyA = "click", keyB = "view", maxLag = 6, binUs = HOUR, minBins = 8)
       .select(col("lag").as("lag_h"), col("n_bins"), col("r"))
@@ -4666,7 +4712,7 @@ object GraftQueries {
     * percentile boundaries are not bit-portable across engines. */
   def qTrimmedMean(spark: SparkSession, dir: String): DataFrame =
     EventOps.trimmedMean(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"),
           col("value").as("v")),
       bucketUs = WEEK, trim = 2)
@@ -4698,7 +4744,7 @@ object GraftQueries {
     * coverage division. */
   def qCompleteness(spark: SparkSession, dir: String): DataFrame =
     EventOps.completeness(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t")),
       dayUs = DAY, binUs = HOUR)
       .select(col("key").as("user_id"), col("day"), col("n"),
@@ -4728,7 +4774,7 @@ object GraftQueries {
     * proof that the battery's operators chain. */
   def qBurstIncidents(spark: SparkSession, dir: String): DataFrame = {
     val bursts = EventOps.burstRate(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")),
       baseHours = 24, factor = 2)
       .filter(col("burst") === 1)
@@ -4769,7 +4815,7 @@ object GraftQueries {
     * one double division at the end. */
   def qAuc(spark: SparkSession, dir: String): DataFrame =
     EventOps.auc(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"),
           col("value").as("v")),
       dayUs = DAY)
@@ -4803,7 +4849,7 @@ object GraftQueries {
     * in longs, σ comparisons the fixed-double-expression discipline. */
   def qSpcRules(spark: SparkSession, dir: String): DataFrame =
     EventOps.spcRules(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"),
           col("value").as("v")),
       bucketUs = WEEK, minN = 8)
@@ -4853,7 +4899,7 @@ object GraftQueries {
     * frames full; local_range is height above the ±6 window minimum. */
   def qPeaks(spark: SparkSession, dir: String): DataFrame =
     EventOps.peaks(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"),
           col("value").as("v")),
       w = 6)
@@ -4884,7 +4930,7 @@ object GraftQueries {
     * by convention. */
   def qRecords(spark: SparkSession, dir: String): DataFrame =
     EventOps.records(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"),
           col("value").as("v")))
       .select(col("key").as("user_id"), col("t"), col("v"),
@@ -4915,7 +4961,7 @@ object GraftQueries {
     * on-bin pair generator, never an all-pairs cross join. */
   def qActivityOverlap(spark: SparkSession, dir: String): DataFrame =
     graft.events.Correlation.activityOverlap(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")),
       binUs = HOUR)
 
@@ -4941,7 +4987,7 @@ object GraftQueries {
     * share. */
   def qScheduleConformance(spark: SparkSession, dir: String): DataFrame =
     EventOps.scheduleConformance(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t")),
       periodUs = HOUR, bucketUs = WEEK)
       .select(col("key").as("user_id"), col("bucket").as("week"),
@@ -4969,7 +5015,7 @@ object GraftQueries {
     * moved up. */
   def qLeaderboard(spark: SparkSession, dir: String): DataFrame =
     EventOps.leaderboard(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")),
       dayUs = DAY)
       .select(col("key").as("event_type"), col("day"), col("n"),
@@ -4994,7 +5040,7 @@ object GraftQueries {
     * exact WAU tier; days with no data for the type emit nothing. */
   def qTrailingActives(spark: SparkSession, dir: String): DataFrame =
     EventOps.trailingDistinct(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t"),
           col("user_id")),
       actorCol = "user_id", windowDays = 7, dayUs = DAY)
@@ -5018,7 +5064,7 @@ object GraftQueries {
     * all. */
   def qOhlc(spark: SparkSession, dir: String): DataFrame =
     Rollup.ohlc(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"),
           col("value").as("v")),
       bucketUs = DAY)
@@ -5038,7 +5084,7 @@ object GraftQueries {
     * over the type's overall mean, floor-snapped. */
   def qSeasonalIndex(spark: SparkSession, dir: String): DataFrame =
     Rollup.seasonalIndex(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t"),
           col("value").as("v")))
       .select(col("key").as("event_type"), col("hour"), col("n"),
@@ -5069,7 +5115,7 @@ object GraftQueries {
     * means over exact sums. */
   def qSessionStats(spark: SparkSession, dir: String): DataFrame = {
     val sessions = EventOps.sessionize(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"),
           col("value").as("v")),
       gap = 12L * 3600 * 1000000,
@@ -5118,7 +5164,7 @@ object GraftQueries {
     * with the peak/trough times (earliest-tie convention on both). */
   def qDrawdown(spark: SparkSession, dir: String): DataFrame =
     EventOps.maxDrawdown(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .groupBy(col("user_id").as("key"), tsUs.as("t"))
         .agg(max("value").as("v")))
       .select(col("key").as("user_id"), col("n"), col("max_dd"),
@@ -5154,7 +5200,7 @@ object GraftQueries {
     * type — the hot-domain concentration screen. */
   def qGini(spark: SparkSession, dir: String): DataFrame =
     graft.stats.StatsOps.gini(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .filter(col("event_type").isNotNull && col("user_id").isNotNull)
         .groupBy(col("event_type").as("key"), col("user_id"))
         .agg(count(lit(1)).as("_n")),
@@ -5182,7 +5228,7 @@ object GraftQueries {
     * counts/shares plus the χ² statistic vs the Benford expectation. */
   def qBenford(spark: SparkSession, dir: String): DataFrame =
     graft.stats.StatsOps.benford(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .filter(col("event_type").isNotNull && col("value").isNotNull)
         .select(col("event_type").as("key"),
           floor(col("value") * 1000 + 0.5).cast("long").as("_xq")),
@@ -5226,7 +5272,7 @@ object GraftQueries {
     * replays it bit-exactly with a recursive CTE. */
   def qKaplanMeier(spark: SparkSession, dir: String): DataFrame =
     EventOps.kaplanMeier(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), col("user_id").as("actor"),
           tsUs.as("t")),
       unitUs = DAY)
@@ -5279,7 +5325,7 @@ object GraftQueries {
     * the union lossless. */
   def qRollingKmv(spark: SparkSession, dir: String): DataFrame = {
     val k = 32
-    val e = spark.read.parquet(s"$dir/events.parquet")
+    val e = events(spark, dir)
       .select(col("event_type"), tsUs.as("t"), col("user_id"))
       .withColumn("day", floor(col("t") / DAY).cast("long"))
     val daily = graft.sketch.Kmv.sketch(e, Seq("event_type", "day"),
@@ -5325,7 +5371,7 @@ object GraftQueries {
     * clamp-affine monoid; exact integer arithmetic end to end. */
   def qSaturating(spark: SparkSession, dir: String): DataFrame =
     EventOps.saturatingSum(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .filter(col("value").isNotNull)
         .groupBy(col("user_id").as("key"), tsUs.as("t"))
         .agg(sum(floor(col("value") * 1000 + 0.5).cast("long") - 50000L)
@@ -5484,7 +5530,7 @@ object GraftQueries {
     * smallest-value tie-break, with its share of the day. */
   def qModeTier(spark: SparkSession, dir: String): DataFrame =
     Rollup.modeTier(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t"),
           col("value").as("v")),
       bucketUs = DAY)
@@ -5570,7 +5616,7 @@ object GraftQueries {
     // from ONE exchange via HOF explosions (type sets are tiny — the
     // pair expansion is |set|², never |rows|²)
     val sess = EventOps.sessionAssign(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"),
           col("value").as("v"), col("event_type")),
       gap = 12L * HOUR, bucketBy = None)
@@ -5634,7 +5680,7 @@ object GraftQueries {
     * exact integer means (1e-3 grid, floor division), exact two-middle
     * median, one final ratio. */
   def qFleetNorm(spark: SparkSession, dir: String): DataFrame = {
-    val hourly = spark.read.parquet(s"$dir/events.parquet")
+    val hourly = events(spark, dir)
       .filter(col("value").isNotNull)
       .groupBy(col("user_id"), floor(tsUs / HOUR).cast("long").as("hour"))
       .agg(sum(floor(col("value") * 1000 + 0.5).cast("long")).as("_sx"),
@@ -6155,7 +6201,7 @@ object GraftQueries {
     * over lags 1..24 with the 1.96/√n white-noise gate. */
   def qDominantPeriod(spark: SparkSession, dir: String): DataFrame =
     graft.events.Correlation.dominantPeriod(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"),
           col("value").as("v")),
       maxLag = 24)
@@ -6196,7 +6242,7 @@ object GraftQueries {
     * expressions. */
   def qBurstiness(spark: SparkSession, dir: String): DataFrame =
     graft.events.Correlation.burstiness(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t")))
 
   val sqlBurstiness: String =
@@ -6259,7 +6305,7 @@ object GraftQueries {
     * incident blackouts (events with value ≥ 180) — the interval-set
     * difference sweep over the two coalesced unions. */
   def qIntervalDiff(spark: SparkSession, dir: String): DataFrame = {
-    val e = spark.read.parquet(s"$dir/events.parquet")
+    val e = events(spark, dir)
     val a = e.select(col("user_id").as("key"), tsUs.as("t0"),
       (tsUs + 30L * 60L * 1000000L).as("t1"))
     val b = e.filter(col("value") >= 180)
@@ -6321,7 +6367,7 @@ object GraftQueries {
     * mean series profile at hourly offsets −3h..+3h relative to each
     * trigger — one as-of window samples every (trigger, offset) probe. */
   def qEventAvg(spark: SparkSession, dir: String): DataFrame = {
-    val trig = spark.read.parquet(s"$dir/events.parquet")
+    val trig = events(spark, dir)
       .filter(col("value") >= 170)
       .select(col("event_type").as("key"), tsUs.as("t")).distinct()
     EventOps.eventTriggeredAverage(points(spark, dir), trig,
@@ -6350,7 +6396,7 @@ object GraftQueries {
     * the oracle replays the naive RANGE frames. */
   def qBurnRate(spark: SparkSession, dir: String): DataFrame =
     EventOps.burnRate(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t"),
           col("value").as("v")),
       isBad = col("v") >= 170, budget = 0.1,
@@ -6385,7 +6431,7 @@ object GraftQueries {
     * oracle recursion depth is the per-user chain, not the corpus). */
   def qBursts(spark: SparkSession, dir: String): DataFrame =
     graft.events.Burst.kleinbergBursts(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t")),
       gamma = 1.0, bucketMicros = WEEK)
 
@@ -6875,7 +6921,7 @@ object GraftQueries {
     * pure rational). */
   def qLombScargle(spark: SparkSession, dir: String): DataFrame =
     graft.stats.Spectral.periodogram(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       periodsUs = Seq(6 * HOUR, 12 * HOUR, DAY, 3 * DAY, 7 * DAY),
       minPoints = 16)
@@ -6929,7 +6975,7 @@ object GraftQueries {
     * is not correctly-rounded, so it would break oracle bit-parity. */
   def qHarmonicFit(spark: SparkSession, dir: String): DataFrame =
     graft.stats.Spectral.harmonicFit(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       periodUs = DAY, minPoints = 16)
       .select(col("key").as("user_id"), col("n"), col("a"), col("b"),
@@ -7338,7 +7384,7 @@ object GraftQueries {
     * alignment. */
   def qGrangerLite(spark: SparkSession, dir: String): DataFrame =
     graft.events.Correlation.grangerLite(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")),
       keyA = "click", keyB = "view", binUs = HOUR, minBins = 8)
 
@@ -7391,7 +7437,7 @@ object GraftQueries {
     * HLL estimate next to the exact distinct count and the relative
     * error the 512-register sketch actually achieved. */
   def qHllTier(spark: SparkSession, dir: String): DataFrame = {
-    val e = spark.read.parquet(s"$dir/events.parquet")
+    val e = events(spark, dir)
       .select(col("event_type"), tsUs.as("t"), col("user_id"))
       .withColumn("hour", floor(col("t") / HOUR))
     val hourly = graft.sketch.Hll.registers(
@@ -7480,7 +7526,7 @@ object GraftQueries {
     * oracle replays the dense-grid pair differences exactly. */
   def qAllanVariance(spark: SparkSession, dir: String): DataFrame =
     graft.events.EventOps.allanVariance(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")),
       taus = Seq(HOUR, 2 * HOUR, 4 * HOUR, 8 * HOUR))
 
@@ -7511,7 +7557,7 @@ object GraftQueries {
     * algebra. */
   def qHillTail(spark: SparkSession, dir: String): DataFrame =
     graft.events.EventOps.hillTailIndex(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")),
       k = 50)
 
@@ -7550,7 +7596,7 @@ object GraftQueries {
     * the quantized-ln long algebra. */
   def qKlMix(spark: SparkSession, dir: String): DataFrame =
     graft.events.EventOps.klMixDrift(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")),
       binUs = DAY)
 
@@ -7583,7 +7629,7 @@ object GraftQueries {
     * grid. */
   def qCentroidShift(spark: SparkSession, dir: String): DataFrame =
     graft.ann.VectorDrift.centroidShift(
-      spark.read.parquet(s"$dir/embeddings.parquet"), batchSize = 100)
+      embeddings(spark, dir), batchSize = 100)
 
   val sqlCentroidShift: String =
     """WITH q AS (SELECT vec_id // 100 AS grp, d.i AS pos,
@@ -7613,7 +7659,7 @@ object GraftQueries {
     * 1e-4 grid. */
   def qLabelPurity(spark: SparkSession, dir: String): DataFrame =
     graft.ann.VectorDrift.labelPurity(
-      spark.read.parquet(s"$dir/embeddings.parquet"))
+      embeddings(spark, dir))
 
   val sqlLabelPurity: String =
     """WITH q AS (SELECT CAST(label AS BIGINT) AS l, vec_id, d.i AS pos,
@@ -7720,7 +7766,7 @@ object GraftQueries {
     * exact integer histograms + quantized-ln long algebra. */
   def qMutualInfo(spark: SparkSession, dir: String): DataFrame =
     graft.events.Correlation.mutualInfo(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")),
       keyA = "click", keyB = "view", binUs = HOUR, valueBins = 8)
 
@@ -7811,7 +7857,7 @@ object GraftQueries {
     * decay or flip over the span; exact long statistics per bucket. */
   def qRollingCorr(spark: SparkSession, dir: String): DataFrame =
     graft.events.Correlation.rollingCorr(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t")),
       keyA = "click", keyB = "view", binUs = HOUR, bucketBins = 168L,
       minBins = 8)
@@ -7863,7 +7909,7 @@ object GraftQueries {
     * integer lift of the rounded powers + quantized-ln algebra. */
   def qSpectralEntropy(spark: SparkSession, dir: String): DataFrame =
     graft.stats.Spectral.spectralEntropy(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("user_id").as("key"), tsUs.as("t"), col("value").as("v")),
       periodsUs = Seq(6 * HOUR, 12 * HOUR, DAY, 3 * DAY, 7 * DAY),
       minPoints = 16)
@@ -7926,7 +7972,7 @@ object GraftQueries {
     * accounting (all-missing keys still surface). */
   def qJsonProfile(spark: SparkSession, dir: String): DataFrame =
     graft.events.EventOps.jsonAttrProfile(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), col("props")))
       .withColumnRenamed("key", "event_type")
 
@@ -7963,7 +8009,7 @@ object GraftQueries {
     * algebra's third operation. */
   def qKmvDifference(spark: SparkSession, dir: String): DataFrame = {
     val k = 32
-    val e = spark.read.parquet(s"$dir/events.parquet")
+    val e = events(spark, dir)
       .select(col("event_type"), tsUs.as("t"), col("user_id"))
       .withColumn("day", floor(col("t") / DAY))
     def side(et: String) = graft.sketch.Kmv.sketch(
@@ -8041,11 +8087,11 @@ object GraftQueries {
     * so the final (still-open) hour emits too — append would hold it
     * back behind the watermark forever on a bounded source. */
   def qStreamHll(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = events(spark, dir).schema
     // the file-stream source needs a DIRECTORY; glob-filter the sf dir
     // down to the events table
     val pts = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+      .option("pathGlobFilter", tableFile("events")).parquet(dir)
       .select(col("event_type").as("key"),
         col("ts").cast("timestamp").as("ts"), col("user_id"))
     val regs = graft.streaming.StreamingRollup
@@ -8170,7 +8216,7 @@ object GraftQueries {
     * one HUGEINT (c²·2²⁰ − i ⇔ max c², tie → smallest i). */
   def qRdpSimplify(spark: SparkSession, dir: String): DataFrame =
     graft.rollup.Rollup.rdp(
-      spark.read.parquet(s"$dir/events.parquet")
+      events(spark, dir)
         .select(col("event_type").as("key"), tsUs.as("t"),
           col("value").as("v")),
       binUs = HOUR, epsMilli = 100)
@@ -8224,7 +8270,7 @@ object GraftQueries {
 
   // classic relational smoke (lineitem)
   def qLineitemAgg(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    lineitem(spark, dir)
       .groupBy("l_returnflag")
       .agg(round(sum("l_quantity"), 4).as("sum_qty"), count(lit(1)).as("n_rows"))
 

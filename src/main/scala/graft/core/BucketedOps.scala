@@ -12,9 +12,8 @@ import org.apache.spark.sql.functions._
   * in the reference's global `merge`/`count_active` results) no longer
   * collapses the whole running computation onto a single task (Spark's
   * "WindowExec: No Partition Defined — moving all data to a single
-  * partition" trap). Same handoff pattern as
-  * [[SeriesOps.segmentsInRangeBucketed]], applied to the merge / cumsum /
-  * as-of-alignment family.
+  * partition" trap). Applied to the merge / cumsum / as-of-alignment
+  * family.
   *
   * Plan shape (round-3 rework — the round-2 version persisted the input to
   * break a diamond; this one has no cache writes at all):

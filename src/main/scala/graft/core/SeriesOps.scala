@@ -253,67 +253,6 @@ object SeriesOps {
       .drop("_rc0")
   }
 
-  /** Skew-safe variant of [[segmentsInRange]] for hot keys: points are
-    * windowed per (key, time-bucket) instead of per key, so a url with
-    * 10^9 points spreads across tasks — the salting that does NOT break
-    * per-key ordering (SURVEY.md §7.4 risk 6). The cross-bucket as-of
-    * handoff is a tiny per-(key, bucket) closings table (one row each)
-    * carried forward with one cheap window. Equivalent output to
-    * [[segmentsInRange]] with "previous" interpolation (p0/p1/vn are
-    * bucket-local, so use the plain variant for linear midpoints).
-    */
-  def segmentsInRangeBucketed(
-      df: DataFrame,
-      start: Column,
-      end: Column,
-      default: Column,
-      bucketMicros: Long): DataFrame = {
-    val b = lit(bucketMicros)
-    val pts = df
-      .filter(col(T) < end)
-      .select(col(K), col(T), col(V), floor(col(T) / b).cast("long").as("_bkt"))
-    // one row per (key, bucket-with-points): the bucket's closing measurement
-    val closings = pts
-      .groupBy(col(K), col("_bkt"))
-      .agg(max_by(struct(col(T), col(V)), col(T)).as("_close"))
-    // full bucket spine per key over [start, end) — empty buckets still
-    // carry the step function, so they get an opening row too
-    val spine = explodeRangeChunked(
-      df.select(col(K)).distinct(),
-      floor(start / b).cast("long"),
-      floor((end - 1) / b).cast("long"),
-      "_bkt")
-    // opening value of each bucket = latest closing from any EARLIER bucket
-    // (including pre-start buckets, which carry the as-of value INTO the
-    // spine but emit no segments themselves)
-    val wKeyBkt = Window.partitionBy(K).orderBy("_bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val openings = spine
-      .unionByName(closings.select(col(K), col("_bkt"))).distinct()
-      .join(closings, Seq(K, "_bkt"), "left")
-      .withColumn("_open", last(col("_close"), ignoreNulls = true).over(wKeyBkt))
-      .filter(col("_bkt") >= floor(start / b).cast("long") &&
-        col("_bkt") <= floor((end - 1) / b).cast("long"))
-      .select(col(K), col("_bkt"),
-        when(col("_open").isNull, default).otherwise(col("_open").getField(V)).as(V),
-        lit(null).cast(df.schema(T).dataType).as(T))
-    // per-(key, bucket) ordered window: nulls (opening rows) sort first
-    val wB = Window.partitionBy(K, "_bkt").orderBy(col(T).asc_nulls_first)
-    val all = pts
-      .select(col(K), col(T), col(V), col("_bkt"))
-      .unionByName(openings.select(col(K), col(T), col(V), col("_bkt")))
-    val bktStart = greatest(col("_bkt") * bucketMicros, start)
-    val bktEnd = least((col("_bkt") + 1) * bucketMicros, end)
-    all
-      .select(col(K), col("_bkt"), col(T).as("p0"),
-        lead(T, 1).over(wB).as("p1"), col(V))
-      .select(col(K),
-        greatest(coalesce(col("p0"), bktStart), start).as("t0"),
-        least(coalesce(col("p1"), bktEnd), end).as("t1"),
-        col(V))
-      .filter(col("t1") > col("t0"))
-  }
-
   /** The value the reference's `get(midpoint, interpolate)` would see on a
     * (possibly clipped) segment (traces/timeseries.py:877-937 uses the
     * segment midpoint; "previous" = the segment value exactly; "linear" =

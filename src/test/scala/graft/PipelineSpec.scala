@@ -556,18 +556,4 @@ class PipelineSpec extends SparkSpec {
     }
     series.unpersist()
   }
-
-  /** Runs `body` in a job group of its own and asserts it started no Spark
-    * job: a marker job's status is delivered after any the body started. */
-  private def assertNoJob[A](what: String)(body: => A): A = {
-    val sc = spark.sparkContext
-    val (group, marker) = (s"no-job-${java.util.UUID.randomUUID}", s"marker-${java.util.UUID.randomUUID}")
-    sc.setJobGroup(group, what)
-    val out = try body finally sc.setJobGroup(marker, "marker")
-    spark.range(1).count()
-    sc.clearJobGroup()
-    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty) Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty, s"$what ran a job")
-    out
-  }
 }

@@ -40,19 +40,29 @@ class PlanAuditSpec extends SparkSpec {
     spark.read.parquet(s"$src/events.parquet").repartition(3)
       .write.parquet(s"$dir/events.parquet")
     assert(new java.io.File(s"$dir/events.parquet").list().count(_.startsWith("part-")) == 3)
+    val inferred = spark.read.parquet(s"$dir/events.parquet")
     val ts = unix_micros(col("ts").cast("timestamp"))
-    val scan = spark.read.parquet(s"$dir/events.parquet").agg(min(ts), max(ts)).head()
-    // a later job's status is delivered after any that eventBounds started
-    val sc = spark.sparkContext
-    sc.setJobGroup("event-bounds", "eventBounds")
-    val got = GraftQueries.eventBounds(spark, dir)
-    sc.setJobGroup("after-bounds", "marker")
-    spark.range(1).count()
-    sc.clearJobGroup()
-    while (sc.statusTracker.getJobIdsForGroup("after-bounds").isEmpty) Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup("event-bounds").isEmpty, "eventBounds ran a job")
+    val scan = inferred.agg(min(ts), max(ts)).head()
+    val (got, events) = assertNoJob("eventBounds and events") {
+      (GraftQueries.eventBounds(spark, dir), GraftQueries.events(spark, dir))
+    }
     assert(got == ((scan.getLong(0), scan.getLong(1))))
     assert(GraftQueries.eventBounds(spark, src) == got, "the single-file table disagrees")
+    assert(events.schema == inferred.schema, events.schema.treeString)
+    assert(events.exceptAll(inferred).isEmpty && inferred.exceptAll(events).isEmpty && !events.isEmpty)
+  }
+
+  test("events fails before any job when a footer column's type is not the declared one") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_events_float").toString
+    spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+      .withColumn("value", col("value").cast("float"))
+      .write.parquet(s"$dir/events.parquet")
+    val (loaded, jobs) = countJobs("events")(scala.util.Try(GraftQueries.events(spark, dir)))
+    assert(jobs == 0, s"events ran $jobs jobs before failing")
+    val err = loaded.failed.get
+    assert(err.isInstanceOf[IllegalArgumentException], err)
+    assert(err.getMessage.contains("events table") && err.getMessage.contains("column value is FLOAT"),
+      err.getMessage)
   }
 
   test("grid sampling broadcasts the time axis (no shuffle of the grid)") {

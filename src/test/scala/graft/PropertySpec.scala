@@ -54,31 +54,6 @@ class PropertySpec extends SparkSpec {
     assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
   }
 
-  test("bucketed (salted) segments ≡ plain segments for distribution + coverage") {
-    val s = spark
-    import s.implicits._
-    (1 to 6).foreach { trial =>
-      val rows = (0 until 8).flatMap { k =>
-        val n = 1 + rnd.nextInt(15)
-        Seq.fill(n)(rnd.nextInt(1000).toLong).distinct.sorted.map(t =>
-          (s"k$k", t, if (rnd.nextInt(8) == 0) null else java.lang.Double.valueOf(rnd.nextInt(5).toDouble)))
-      }
-      val df = rows.toDF("key", "t", "v").withColumn("v", col("v").cast("double"))
-      val start = lit(rnd.nextInt(100).toLong)
-      val end = lit((900 + rnd.nextInt(100)).toLong)
-      val dflt = lit(7.0)
-      def dist(segs: org.apache.spark.sql.DataFrame) =
-        graft.agg.AggOps.distribution(segs, normalized = false)
-          .collect()
-          .map(r => (r.getString(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)), r.getLong(2)))
-          .toSet
-      val plain = dist(SeriesOps.segmentsInRange(df, start, end, dflt))
-      // bucket width deliberately awkward (not dividing the range evenly)
-      val bucketed = dist(SeriesOps.segmentsInRangeBucketed(df, start, end, dflt, 137L))
-      assert(plain == bucketed, s"trial $trial:\n${(plain -- bucketed)}\nvs\n${(bucketed -- plain)}")
-    }
-  }
-
   test("SQL surface: ts_chunk_encode/ts_chunk_explode round-trip, ts_quantile") {
     GraftFunctions.register(spark)
     val s = spark

@@ -16,6 +16,27 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Runs `body` in a job group of its own and returns its result with the
+    * number of Spark jobs it started: a marker job's status is delivered
+    * after any the body started. */
+  def countJobs[A](what: String)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val (group, marker) = (s"jobs-${java.util.UUID.randomUUID}", s"marker-${java.util.UUID.randomUUID}")
+    sc.setJobGroup(group, what)
+    val out = try body finally sc.setJobGroup(marker, "marker")
+    spark.range(1).count()
+    sc.clearJobGroup()
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty) Thread.sleep(10)
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  /** Runs `body` and asserts it started no Spark job. */
+  def assertNoJob[A](what: String)(body: => A): A = {
+    val (out, jobs) = countJobs(what)(body)
+    assert(jobs == 0, s"$what ran $jobs jobs")
+    out
+  }
+
   /** points with Double time. */
   def seriesD(points: Seq[(Double, Option[Double])], key: String = "s"): DataFrame = {
     val s = spark
