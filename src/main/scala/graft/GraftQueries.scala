@@ -17,7 +17,7 @@ import org.apache.parquet.column.statistics.LongStatistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -303,9 +303,7 @@ object GraftQueries {
   def qDistributionLinear(spark: SparkSession, dir: String): DataFrame = {
     val pts = points(spark, dir)
     val (tmin, tmax) = eventBounds(spark, dir)
-    // lookahead: the point AT tmax is the bracketing measurement for the
-    // final segment's interpolation (get(mid,"linear") bisects to it)
-    val segs = SeriesOps.segmentsInRange(pts, lit(tmin), lit(tmax), nullD, lookahead = true)
+    val segs = SeriesOps.segmentsInRange(pts, lit(tmin), lit(tmax), nullD)
     segs
       .groupBy(col("key"), round(SeriesOps.segmentValue("linear", nullD), 6).as("state"))
       .agg(sum(col("t1") - col("t0")).cast("long").as("weight_us"))
@@ -436,15 +434,17 @@ object GraftQueries {
         col("weight").as("weight_us"))
   }
 
-  def qRollupDaily(spark: SparkSession, dir: String): DataFrame =
-    hourlyHist(spark, dir)
-      .groupBy(col("key"), (floor(col("bin_start") / DAY) * DAY).cast("long").as("bin_start"), col("state"))
+  /** `hist` (key, bin_start, state, weight_us) rebinned by `floorBin`. */
+  private def rebinHist(hist: DataFrame, floorBin: Column => Column): DataFrame =
+    hist
+      .groupBy(col("key"), floorBin(col("bin_start")).as("bin_start"), col("state"))
       .agg(sum("weight_us").cast("long").as("weight_us"))
 
+  def qRollupDaily(spark: SparkSession, dir: String): DataFrame =
+    rebinHist(hourlyHist(spark, dir), Rollup.floorTo(DAY))
+
   def qRollupWeekly(spark: SparkSession, dir: String): DataFrame =
-    qRollupDaily(spark, dir)
-      .groupBy(col("key"), Rollup.floorWeek(col("bin_start")).as("bin_start"), col("state"))
-      .agg(sum("weight_us").cast("long").as("weight_us"))
+    rebinHist(qRollupDaily(spark, dir), Rollup.floorWeek)
 
   private def sqlHist(binExpr: String): String =
     sqlPrefix() +
@@ -6679,10 +6679,7 @@ object GraftQueries {
     * cascade this exercises the calendar floor; weights stay exact longs
     * so the cascade is still lossless. */
   def qRollupMonthly(spark: SparkSession, dir: String): DataFrame =
-    qRollupDaily(spark, dir)
-      .groupBy(col("key"), Rollup.floorMonth(col("bin_start")).as("bin_start"),
-        col("state"))
-      .agg(sum("weight_us").cast("long").as("weight_us"))
+    rebinHist(qRollupDaily(spark, dir), Rollup.floorMonth)
 
   val sqlRollupMonthly: String =
     s"""SELECT key,
@@ -6698,9 +6695,10 @@ object GraftQueries {
   def qRetentionSweep(spark: SparkSession, dir: String): DataFrame = {
     val pts = points(spark, dir)
     val (_, tmax) = eventBounds(spark, dir)
+    val hourly = hourlyHist(spark, dir)
+    val daily = rebinHist(hourly, Rollup.floorTo(DAY))
     val (r, h, d, w) = Rollup.applyRetention(
-      pts, hourlyHist(spark, dir), qRollupDaily(spark, dir),
-      qRollupWeekly(spark, dir), nowUs = tmax,
+      pts, hourly, daily, rebinHist(daily, Rollup.floorWeek), nowUs = tmax,
       rawKeepUs = 7 * DAY, hourlyKeepUs = 30 * DAY, dailyKeepUs = 90 * DAY)
     def manifest(df: DataFrame, tier: String, tc: String): DataFrame =
       df.agg(count(lit(1)).as("n_rows"),

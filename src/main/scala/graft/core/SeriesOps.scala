@@ -182,43 +182,35 @@ object SeriesOps {
     * measurement times/next value for linear interpolation:
     * p0 (measurement time opening the segment; null = before first
     * measurement), p1 (next measurement time; null = after last), vn
-    * (value at p1).
+    * (value at p1). p1 and vn of a key's last segment name its first
+    * measurement at or after `end`, the point `get(mid, "linear")`
+    * interpolates toward (traces/timeseries.py:78-89).
     *
-    * Keys present in `df` but with no points in range still emit the single
-    * default-valued segment (start, end, default).
+    * One ordered pass per key: every point opens its own segment, and a
+    * key's first point (no earlier point in the window) also opens the
+    * default segment [start, first_t) with v = default, p0 = null,
+    * p1 = first_t, vn = first value. So a key whose points all lie at or
+    * after `end` emits the single segment (start, end, default), and one
+    * whose points all lie before `start` emits (start, end, last value).
     */
-  def segmentsInRange(
-      df: DataFrame,
-      start: Column,
-      end: Column,
-      default: Column,
-      lookahead: Boolean = false): DataFrame = {
+  def segmentsInRange(df: DataFrame, start: Column, end: Column, default: Column): DataFrame = {
     val tType = df.schema(T).dataType
-    // For "previous" interpolation, points at/after `end` can be pruned at
-    // the scan (the t1 clip below is equivalent). Linear interpolation needs
-    // the first point beyond `end` as the bracketing measurement
-    // (get(mid, "linear") interpolates toward it, traces/timeseries.py:78-89),
-    // so `lookahead = true` keeps it.
-    val pts0 = df.select(col(K), col(T), col(V))
-    val pts = if (lookahead) pts0 else pts0.filter(col(T) < end)
-    // One synthetic "default" row per key at t = null; nulls sort first in
-    // ascending order, so it behaves as t = -infinity in the lead window.
-    val defRows = df
-      .select(col(K)).distinct()
-      .select(col(K), lit(null).cast(tType).as(T), default.cast("double").as(V))
-    val all = pts.unionByName(defRows)
-    all
+    def seg(p0: Column, p1: Column, v: Column, vn: Column): Column =
+      struct(p0.as("p0"), p1.as("p1"), v.cast("double").as(V), vn.cast("double").as("vn"))
+    val own = seg(col(T), col("p1"), col(V), col("vn"))
+    val dflt = seg(lit(null).cast(tType), col(T), default, col(V))
+    df.select(
+        col(K), col(T), col(V),
+        lag(T, 1).over(wKey).as("_pt"),
+        lead(T, 1).over(wKey).as("p1"),
+        lead(V, 1).over(wKey).as("vn"))
+      .select(col(K),
+        explode(when(col("_pt").isNull, array(dflt, own)).otherwise(array(own))).as("_s"))
       .select(
         col(K),
-        col(T).as("p0"),
-        lead(T, 1).over(Window.partitionBy(K).orderBy(col(T).asc_nulls_first)).as("p1"),
-        col(V),
-        lead(V, 1).over(Window.partitionBy(K).orderBy(col(T).asc_nulls_first)).as("vn"))
-      .select(
-        col(K),
-        greatest(col("p0"), start).as("t0"), // greatest skips nulls
-        least(coalesce(col("p1"), end), end).as("t1"),
-        col(V), col("p0"), col("p1"), col("vn"))
+        greatest(col("_s.p0"), start).as("t0"), // greatest skips nulls
+        least(coalesce(col("_s.p1"), end), end).as("t1"),
+        col("_s.v").as(V), col("_s.p0").as("p0"), col("_s.p1").as("p1"), col("_s.vn").as("vn"))
       .filter(col("t1") > col("t0"))
   }
 
@@ -310,30 +302,22 @@ object SeriesOps {
 
   /** New series equal to the original on [start, end]: point at `start`
     * with the as-of value, interior points, plus a point at `end`
-    * (reference `slice`, traces/timeseries.py:542-557).
+    * (reference `slice`, traces/timeseries.py:542-557). Every row comes
+    * from the segments of [[segmentsInRange]]: each segment gives its
+    * (t0, v), which is the start row for the segment at `start` and an
+    * interior point for every other, and the segment that ends at `end`
+    * also gives the end row.
     */
   def sliceSeries(df: DataFrame, start: Column, end: Column, default: Column): DataFrame = {
-    val segs = segmentsInRange(df, start, end, default)
-    val startRows = segs
-      .withColumn("_rn", row_number().over(Window.partitionBy(K).orderBy("t0")))
-      .filter(col("_rn") === 1)
-      .select(col(K), col("t0").as(T), col(V))
-    val interior = df.filter(col(T) > start && col(T) < end).select(col(K), col(T), col(V))
     // value at `end` = as-of lookup INCLUSIVE of a point exactly at `end`
     // (reference: result[t1] = self[t1], traces/timeseries.py:555)
-    val keys = df.select(col(K)).distinct()
-    val wDesc = Window.partitionBy(K).orderBy(col(T).desc)
-    val lastLe = df
-      .filter(col(T) <= end)
-      .withColumn("_rn", row_number().over(wDesc))
-      .filter(col("_rn") === 1)
-      .select(col(K), struct(col(V)).as("_last")) // struct: "measured" marker
-    val endRows = keys
-      .join(lastLe, Seq(K), "left")
-      .select(
-        col(K), end.as(T),
-        when(col("_last").isNull, default).otherwise(col("_last").getField(V)).as(V))
-    startRows.unionByName(interior).unionByName(endRows)
+    val atEnd = when(col("p1") <=> end, col("vn")).otherwise(col(V))
+    segmentsInRange(df, start, end, default)
+      .select(col(K), explode(array(
+        struct(col("t0").as(T), col(V).as(V)),
+        when(col("t1") === end, struct(col("t1").as(T), atEnd.as(V))))).as("_r"))
+      .filter(col("_r").isNotNull)
+      .select(col(K), col("_r")(T).as(T), col("_r")(V).as(V))
   }
 
   /** Count of measurement points per key in [start, end] with the four

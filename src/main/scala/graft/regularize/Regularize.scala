@@ -62,26 +62,12 @@ object Regularize {
   /** Point-sample the step function at probe times (key, t) with
     * "previous" interpolation: union-then-window as-of. A measurement
     * exactly at the probe time counts (bisect_right semantics,
-    * traces/timeseries.py:91-110). Output (key, t, v).
+    * traces/timeseries.py:91-110). Output (key, t, v). This is
+    * [[samplePreviousStale]] with no age bound (`t - pt` never exceeds
+    * `Long.MaxValue`).
     */
-  def samplePrevious(df: DataFrame, probes: DataFrame, default: Column): DataFrame = {
-    val data = df.select(col(K), col(T), col(V)).withColumn("_g", lit(0))
-    val probe = probes
-      .select(col(K), col(T))
-      .withColumn(V, lit(null).cast("double"))
-      .withColumn("_g", lit(1))
-    val w = Window
-      .partitionBy(K)
-      .orderBy(col(T).asc, col("_g").asc) // data sorts before probes at equal t
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    data
-      .unionByName(probe)
-      .withColumn("_s", last(when(col("_g") === 0, struct(col(V))), ignoreNulls = true).over(w))
-      .filter(col("_g") === 1)
-      .select(
-        col(K), col(T),
-        when(col("_s").isNull, default).otherwise(col("_s").getField(V)).as(V))
-  }
+  def samplePrevious(df: DataFrame, probes: DataFrame, default: Column): DataFrame =
+    samplePreviousStale(df, probes, default, Long.MaxValue)
 
   /** Staleness-bounded previous-value sampling: [[samplePrevious]] with an
     * expiry — a probe answers with the latest measurement at-or-before it
@@ -91,9 +77,8 @@ object Regularize {
     * (the PromQL "lookback delta" staleness rule, public
     * prometheus.io/docs query semantics; the reference's `get(t,
     * "previous")` at traces/timeseries.py:91-110 is the maxAge = ∞
-    * special case). Same single union-then-window per-key shape as
-    * [[samplePrevious]] — the age test is a scalar expression on the
-    * carried (t, v) struct, so the plan cost is identical and the
+    * special case). One union-then-window per key: the age test is a
+    * scalar expression on the carried (t, v) struct, so the
     * whole-stage-codegen span is unbroken. */
   def samplePreviousStale(
       df: DataFrame, probes: DataFrame, default: Column,

@@ -52,7 +52,7 @@ class AggSpec extends SparkSpec {
 
   test("linear mean with and without mask (test_methods.py:69-88)") {
     val df = seriesD(Seq((0.0, Some(0.0)), (1.0, Some(0.0)), (3.0, Some(20.0))))
-    val segs = SeriesOps.segmentsInRange(df, lit(0.0), lit(2.0), nullD, lookahead = true)
+    val segs = SeriesOps.segmentsInRange(df, lit(0.0), lit(2.0), nullD)
     val m1 = AggOps.timeWeightedMean(segs, "linear").collect().head.getDouble(1)
     assert(math.abs(m1 - Goldens.meanLinear02) < 1e-12)
 
@@ -60,7 +60,7 @@ class AggSpec extends SparkSpec {
     def maskedMean(endT: Double): Double = {
       val mask = SeriesOps.trueIntervals(maskSeries, lit(0.0), lit(endT), lit(0.0)).drop("key")
       val s = SeriesOps.intersectMask(
-        SeriesOps.segmentsInRange(df, lit(0.0), lit(endT), nullD, lookahead = true), mask)
+        SeriesOps.segmentsInRange(df, lit(0.0), lit(endT), nullD), mask)
       AggOps.timeWeightedMean(s, "linear").collect().head.getDouble(1)
     }
     assert(math.abs(maskedMean(2.0) - Goldens.meanLinearMask02) < 1e-9)

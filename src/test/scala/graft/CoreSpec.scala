@@ -27,11 +27,21 @@ class CoreSpec extends SparkSpec {
   }
 
   test("segmentsInRange on key with no points in range emits default segment") {
-    val df = seriesD(Seq((100.0, Some(1.0))))
+    // after: points only at/after end (one exactly at end); before: points
+    // only before start; atStart: a point exactly at start
+    val df = seriesD(Seq((10.0, Some(1.0)), (12.0, Some(2.0)), (100.0, Some(1.0))), "after")
+      .unionByName(seriesD(Seq((-3.0, Some(7.0)), (-1.0, Some(8.0))), "before"))
+      .unionByName(seriesD(Seq((0.0, Some(3.0)), (4.0, Some(6.0))), "atStart"))
     val segs = SeriesOps
       .segmentsInRange(df, lit(0.0), lit(10.0), lit(5.0))
-      .select("t0", "t1", "v").collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2)))
-    assert(segs.toSeq == Seq((0.0, 10.0, 5.0)))
+      .select("key", "t0", "t1", "v", "p0").collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3),
+        Option.when(!r.isNullAt(4))(r.getDouble(4))))
+      .groupBy(_._1).map { case (k, rs) => k -> rs.map(r => (r._2, r._3, r._4, r._5)).sortBy(_._1).toSeq }
+    assert(segs == Map(
+      "after" -> Seq((0.0, 10.0, 5.0, None)),
+      "before" -> Seq((0.0, 10.0, 8.0, Some(-1.0))),
+      "atStart" -> Seq((0.0, 4.0, 3.0, Some(0.0)), (4.0, 10.0, 6.0, Some(4.0)))))
   }
 
   test("compact drops repeated values incl nulls (traces compact)") {

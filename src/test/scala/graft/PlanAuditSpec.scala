@@ -82,6 +82,23 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("Exchange"), plan)
   }
 
+  test("the distribution and tier queries scan events once") {
+    // counted on the final plan after collect(): AdaptiveSparkPlanHelper
+    // walks into the query stages that plain collect cannot see; a reused
+    // exchange is a leaf, so a reused scan is not counted twice
+    object stages extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val scans = Seq("q05_distribution", "q10_rollup_hourly", "q11_rollup_daily", "q12_rollup_weekly")
+      .map { name =>
+        val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+        df.collect()
+        name -> stages.collectWithSubqueries(df.queryExecution.executedPlan) {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec
+              if f.relation.location.rootPaths.exists(_.getName == "events.parquet") => f
+        }.size
+      }
+    assert(scans.forall(_._2 == 1), scans.mkString(", "))
+  }
+
   test("no driver query plans an unpartitioned window (single-partition trap)") {
     // a Window with an empty partition spec moves ALL rows to one task —
     // the round-1 scale-killer this guards. Audited on the OPTIMIZED

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,18 +17,30 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  /** Runs `body` in a job group of its own and returns its result with the
-    * number of Spark jobs it started: a marker job's status is delivered
-    * after any the body started. */
+  /** Runs `body` and returns its result with the number of Spark jobs it
+    * started, on any thread: a listener counts every job start from the
+    * body's start up to a marker job, whose start the bus delivers after
+    * any the body started. */
   def countJobs[A](what: String)(body: => A): (A, Int) = {
     val sc = spark.sparkContext
-    val (group, marker) = (s"jobs-${java.util.UUID.randomUUID}", s"marker-${java.util.UUID.randomUUID}")
-    sc.setJobGroup(group, what)
-    val out = try body finally sc.setJobGroup(marker, "marker")
-    spark.range(1).count()
-    sc.clearJobGroup()
-    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty) Thread.sleep(10)
-    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+    val marker = s"marker-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val counter = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == marker)) markerSeen.countDown()
+        else if (markerSeen.getCount > 0) jobs.incrementAndGet()
+    }
+    org.apache.spark.ProfileBus.drain(sc) // earlier jobs' starts reach no one after this
+    sc.addSparkListener(counter)
+    try {
+      sc.setJobDescription(what)
+      val out = try body finally sc.setJobDescription(null)
+      sc.setJobGroup(marker, "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(2, java.util.concurrent.TimeUnit.MINUTES), s"$what: marker job not seen")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(counter)
   }
 
   /** Runs `body` and asserts it started no Spark job. */
