@@ -10,6 +10,7 @@ package graft.tools {
 
   import graft.{Bench, SparkEntry}
   import org.apache.spark.ProfileBus
+  import org.apache.spark.metrics.source.CodegenMetrics
   import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
@@ -20,7 +21,7 @@ package graft.tools {
   /** Where the time of a registry query or a Bench leg goes.
     *
     * {{{
-    * runMain graft.tools.Profile time   [names…]          min wall over reps: build / plan / execute, jobs, stages, tasks
+    * runMain graft.tools.Profile time   [names…]          min wall over reps: build / plan / execute, jobs, stages, tasks, compiles
     * runMain graft.tools.Profile stages [names…]          the same, plus one line per stage
     * runMain graft.tools.Profile plan   [outDir/] [names…] formatted final plan, printed or written to <outDir>/<q>.txt
     * }}}
@@ -38,9 +39,10 @@ package graft.tools {
   object Profile {
 
     /** One timed run: seconds to build the DataFrame, to plan it and to
-      * execute it (a leg is all execute), and the work it started. */
+      * execute it (a leg is all execute), the work it started, and the
+      * classes this JVM's codegen compiled meanwhile. */
     final case class Run(build: Double, plan: Double, exec: Double,
-        jobs: Int, stages: Int, tasks: Int, stageLines: Seq[String]) {
+        jobs: Int, stages: Int, tasks: Int, compiles: Long, stageLines: Seq[String]) {
       def wall: Double = build + plan + exec
     }
 
@@ -61,8 +63,8 @@ package graft.tools {
           f" cpu=${m.executorCpuTime / 1000000}%6d ms gc=${m.jvmGCTime}%5d ms deser=${m.executorDeserializeTime}%5d ms"
       }
       def reset(): Unit = synchronized { jobs = 0; stages = 0; tasks = 0; lines.clear() }
-      def run(build: Double, plan: Double, exec: Double): Run =
-        synchronized { Run(build, plan, exec, jobs, stages, tasks, lines.toList) }
+      def run(build: Double, plan: Double, exec: Double, compiles: Long): Run =
+        synchronized { Run(build, plan, exec, jobs, stages, tasks, compiles, lines.toList) }
     }
 
     /** Registry query or Bench leg `name`: one untimed warmup, then the
@@ -105,15 +107,21 @@ package graft.tools {
           spark.catalog.clearCache()
           ProfileBus.drain(sc)
           rec.reset()
+          val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           val (b, p, e) = once()
           ProfileBus.drain(sc)
-          rec.run(b, p, e)
+          rec.run(b, p, e, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled)
         }.minBy(_.wall)
       } finally {
         sc.removeSparkListener(rec)
         sc.setJobDescription(null)
       }
     }
+
+    /** The line `time` prints for `name`'s reported run `r`. */
+    def summary(name: String, r: Run): String =
+      f"$name%-26s min=${r.wall}%7.3f s (build=${r.build}%6.3f plan=${r.plan}%6.3f exec=${r.exec}%7.3f)" +
+        f"  jobs=${r.jobs}%3d stages=${r.stages}%3d tasks=${r.tasks}%5d compiles=${r.compiles}%4d"
 
     /** The formatted plan of registry query `q`, after running that same
       * plan once so AQE settles its final form. */
@@ -150,8 +158,7 @@ package graft.tools {
           }
         } else {
           val r = time(spark, sfDir, name, reps)
-          println(f"$name%-26s min=${r.wall}%7.3f s (build=${r.build}%6.3f plan=${r.plan}%6.3f exec=${r.exec}%7.3f)" +
-            f"  jobs=${r.jobs}%3d stages=${r.stages}%3d tasks=${r.tasks}%5d")
+          println(summary(name, r))
           if (mode == "stages") r.stageLines.foreach(println)
         }
       } finally spark.stop()

@@ -11,6 +11,8 @@ class ProfileSpec extends SparkSpec {
     assert(r.jobs > 0 && r.stages > 0 && r.tasks >= r.stages, r)
     assert(r.stageLines.size == r.stages, r)
     assert(r.exec > 0 && r.build > 0, r)
+    val line = Profile.summary("q01_segments", r)
+    assert(line.matches(s".*jobs=\\s*${r.jobs} stages=\\s*${r.stages} tasks=\\s*${r.tasks} compiles=\\s*${r.compiles}"), line)
   }
 
   test("plan: q03_sample_prev's settled plan shows its exchanges") {
